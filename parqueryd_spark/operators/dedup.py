@@ -448,8 +448,11 @@ def paragraph_dedup(
     its first corpus-wide occurrence and documents are rebuilt ``sep``-joined
     from the survivors. Prefer this over :func:`span_dedup` when the corpus
     has real structural delimiters; fall back to fixed token spans when text
-    is an undelimited stream. Same skew-safe plan (see span_dedup), same
-    output shape (doc, n_spans, n_kept, dedup_text)."""
+    is an undelimited stream. Runs :func:`_keep_first_unit_dedup` (the plan
+    span_dedup uses) and returns its shape (doc, n_spans, n_kept,
+    dedup_text). The units are ``split(text, sep)`` passed inline, with no
+    pre-projected column: split is not inside a lambda, so nothing re-runs
+    per unit. ``sep`` is a regex, as for ``F.split``."""
     return _keep_first_unit_dedup(
         df, id_col, F.split(F.col(text_col), sep), sep, rebuild, drop_join
     )
@@ -495,12 +498,18 @@ def _keep_first_unit_dedup(
     map-side partials, so a span repeated 10^9 times reduces locally instead
     of piling one window partition (the reason this is not a ROW_NUMBER).
 
+    ``units`` elements must be non-null. md5 of a null unit is a null digest,
+    and the carry path's left join below keeps a unit with no keeper row,
+    so a null unit would be silently KEPT where an inner join dropped it.
+    Both callers satisfy this: span_dedup's units are ``concat_ws``
+    results and paragraph_dedup's are ``split`` elements, never null.
+
     r16 (guide §4.1/§1.2, the predict_lang lesson applied to generators):
-    callers must hand in a ``units`` expression whose token/array source is
-    a PRE-PROJECTED column of ``df`` (see span_dedup's ``_toks``) — lambdas
-    get no CSE, so an inlined ``slice(split(text))`` re-ran split(text) PER
-    SPAN (~12x per doc at span_tokens=3; measured 1.09 -> 0.53 s for the
-    sf0.1 span derivation). The carry path's keeper join-back is also cut
+    when ``units`` slices its source inside a lambda (span_dedup's
+    per-span ``slice``), that source must be a PRE-PROJECTED column of
+    ``df`` (span_dedup's ``_toks``) — lambdas get no CSE, so an inlined
+    ``slice(split(text))`` re-ran split(text) PER SPAN (~12x per doc at
+    span_tokens=3; measured 1.09 -> 0.53 s for the sf0.1 span derivation). The carry path's keeper join-back is also cut
     to DUPLICATED digests only (count >= 2, the _mark_keepers posture):
     singleton spans are their own keepers by definition, so a left join
     with null keep => kept is identical — and the join build side shrinks
@@ -803,13 +812,6 @@ def minhash_signature_from_hashes(hash_arr_col, num_hashes: int = 128):
         return F.zip_with(acc, cand, lambda m, c: F.least(m, c))
 
     return F.aggregate(base, init, step)
-
-
-def minhash_signature(text_col, k: int = 3, num_hashes: int = 128):
-    """Minhash signature straight from a text column (convenience wrapper over
-    :func:`minhash_signature_from_hashes`)."""
-    hashed = F.transform(shingles(text_col, k), lambda s: F.xxhash64(s))
-    return minhash_signature_from_hashes(hashed, num_hashes)
 
 
 def _explode_bands(docs_with_sig: DataFrame, bands: int, rows: int) -> DataFrame:

@@ -112,15 +112,6 @@ def punct_ratio(text: Column | str) -> Column:
     return (F.length(c) - F.length(F.regexp_replace(c, "[.,!?;:]", ""))) / F.length(c)
 
 
-def mean_token_len(text: Column | str) -> Column:
-    toks = tokens(text)
-    return F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / F.size(toks)
-
-
 def quality_score(text: Column | str) -> Column:
     """Composite [0,1]-ish quality heuristic: length band + stopword presence -
     punctuation excess. Deliberately simple arithmetic so the DuckDB oracle can
@@ -537,13 +528,7 @@ def text_index_publish(
     query time, which keeps the index maintainable by appending postings for
     new docs without rewriting df counts.
     """
-    root = index_dir.rstrip("/")
-    _index_postings(df, id_col, text_col, n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(root + "/postings/batch=-1")
-    _index_stats_partial(df, text_col, n_buckets).write.mode("overwrite").parquet(
-        root + "/_stats/batch=-1"
-    )
+    _index_land(index_dir, df, id_col, text_col, -1, n_buckets)
 
 
 def bm25_from_index(
@@ -617,6 +602,18 @@ def bm25_from_index(
     )
 
 
+def _index_land(index_dir, df, id_col, text_col, batch, n_buckets=None) -> None:
+    """Land ``df``'s postings and stats partial as generation ``batch`` of
+    the index (``n_buckets`` defaults to the published index's)."""
+    from parqueryd_spark.streaming.state import land
+
+    root = index_dir.rstrip("/")
+    if n_buckets is None:
+        n_buckets = df.sparkSession.read.parquet(root + "/_stats").head()["n_buckets"]
+    land(_index_postings(df, id_col, text_col, n_buckets), root + "/postings", batch, ["bucket"])
+    land(_index_stats_partial(df, text_col, n_buckets), root + "/_stats", batch)
+
+
 def _index_batches(spark, root: str) -> list[int]:
     from parqueryd_spark.sources.fs import HadoopFS
 
@@ -655,17 +652,8 @@ def text_index_append(
     Precondition: id-disjoint from already-indexed docs (re-ingesting an id
     would double its postings; dedup upstream with
     ``dedup.incremental_minhash_pairs`` / exact id anti-join)."""
-    root = index_dir.rstrip("/")
-    batches = _index_batches(spark, root)
-    nxt = min(batches, default=-1) - 1
-    stats_any = spark.read.parquet(root + "/_stats").head()
-    n_buckets = stats_any["n_buckets"]
-    _index_postings(new_docs, id_col, text_col, n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(root + f"/postings/batch={nxt}")
-    _index_stats_partial(new_docs, text_col, n_buckets).write.mode(
-        "overwrite"
-    ).parquet(root + f"/_stats/batch={nxt}")
+    nxt = min(_index_batches(spark, index_dir.rstrip("/")), default=-1) - 1
+    _index_land(index_dir, new_docs, id_col, text_col, nxt)
 
 
 def bigram_logprob(df, id_col: str, text_col: str, add_k: float = 1.0):

@@ -401,6 +401,7 @@ def _served_kmv_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
     import tempfile
 
     from parqueryd_spark.operators.sketches import kmv_sketch
+    from parqueryd_spark.streaming.state import land
 
     key = (os.path.abspath(sf_dir), k)
     with _KMV_STATE_LOCK:
@@ -409,13 +410,8 @@ def _served_kmv_state(spark: SparkSession, sf_dir: str, k: int = 128) -> str:
             path = tempfile.mkdtemp(prefix="parqueryd_spark_kmv_")
             ev = load_table(spark, sf_dir, "events")
             for i in range(3):
-                kmv_sketch(
-                    ev.where(increment_of("event_id", i)),
-                    ["event_type"],
-                    "user_id",
-                    k=k,
-                    hash_fn="md5_52",
-                ).write.mode("overwrite").parquet(os.path.join(path, f"batch={i}"))
+                part = ev.where(increment_of("event_id", i))
+                land(kmv_sketch(part, ["event_type"], "user_id", k=k, hash_fn="md5_52"), path, i)
             _KMV_STATE_CACHE[key] = path
     return path
 
@@ -478,6 +474,7 @@ def _served_kmv_compacted_state(spark: SparkSession, sf_dir: str, k: int = 128) 
 
     from parqueryd_spark.operators.sketches import kmv_sketch
     from parqueryd_spark.streaming.rollup import compact_kmv_state
+    from parqueryd_spark.streaming.state import land
 
     key = (os.path.abspath(sf_dir), k, "compacted")
     with _KMV_STATE_LOCK:
@@ -486,13 +483,8 @@ def _served_kmv_compacted_state(spark: SparkSession, sf_dir: str, k: int = 128) 
             path = tempfile.mkdtemp(prefix="parqueryd_spark_kmvc_")
             ev = load_table(spark, sf_dir, "events")
             for i in range(3):
-                kmv_sketch(
-                    ev.where(increment_of("event_id", i)),
-                    ["event_type"],
-                    "user_id",
-                    k=k,
-                    hash_fn="md5_52",
-                ).write.mode("overwrite").parquet(os.path.join(path, f"batch={i}"))
+                part = ev.where(increment_of("event_id", i))
+                land(kmv_sketch(part, ["event_type"], "user_id", k=k, hash_fn="md5_52"), path, i)
             compact_kmv_state(spark, path, ("event_type",), k=k)
             _KMV_STATE_CACHE[key] = path
     return path

@@ -4,12 +4,12 @@ At 100 TB, layout IS performance: partition pruning turns full scans into
 single-partition reads, and range-sorted files give parquet row-group min/max
 stats real selectivity. Atomic publication lives in
 ``parqueryd_spark.sources.sinks.atomic_publish`` (the moveparquet-barrier
-analog); ``publish_atomic`` here is a thin deprecated alias to it.
+analog).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -92,21 +92,3 @@ def zorder_layout(
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
     )
-
-
-def publish_atomic(df: DataFrame, final_path: str) -> None:
-    """Deprecated alias for :func:`parqueryd_spark.sources.sinks.atomic_publish`
-    (one concept, one implementation — the sinks version adds uuid-tokenized
-    staging dirs and rollback if the final rename fails)."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    atomic_publish(df, final_path)
-
-
-def cache_table(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Register + cache a parquet table (the thin analog of the reference's
-    download-to-local-disk layer, O19 — Spark's cache replaces file copying)."""
-    df = spark.read.parquet(path)
-    df.createOrReplaceTempView(name)
-    spark.catalog.cacheTable(name)
-    return spark.table(name)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.sources.sinks import upsert_parquet, upsert_partitioned
+from parqueryd_spark.streaming import state
 
 
 def collapse_changes(
@@ -50,14 +51,13 @@ def stream_apply_cdc(
     partition_col: str | None = None,
     delete_col: str | None = None,
     seq_col: str | None = None,
-    trigger_available_now: bool = True,
 ):
-    """Start a foreachBatch query merging each micro-batch of changes into
-    the parquet dataset at ``dataset_dir``. ``partition_col`` selects the
-    partition-pruned apply path (cost per trigger scales with the touched
-    partitions, not the table — the only shape that holds when the feed
-    touches one day of a years-deep table); ``seq_col`` orders intra-batch
-    changes per key. Returns the started StreamingQuery."""
+    """Start an availableNow foreachBatch query merging each micro-batch of
+    changes into the parquet dataset at ``dataset_dir``. ``partition_col``
+    selects the partition-pruned apply path (cost per trigger scales with the
+    touched partitions, not the table — the only shape that holds when the
+    feed touches one day of a years-deep table); ``seq_col`` orders
+    intra-batch changes per key. Returns the started StreamingQuery."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -71,9 +71,4 @@ def stream_apply_cdc(
         else:
             upsert_parquet(spark, dataset_dir, changes, key_cols, delete_col)
 
-    writer = updates_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.drain(updates_stream, checkpoint_dir, _apply)

@@ -4,32 +4,25 @@ publish the dense model table atomically (sources/sinks.atomic_publish, the
 same frozen-model contract as the published LM / BM25 / ANN indexes), then
 classify every incoming micro-batch against the FROZEN model. Scoring is
 per-document (no cross-document state), so per-batch outputs are
-batch-equivalent to one-shot scoring row-for-row, and idempotent
-``batch=<id>`` partitions give effectively-exactly-once output under
-checkpoint replay — the stream_score_documents contract, applied to
-classification."""
+batch-equivalent to one-shot scoring row-for-row — the
+stream_score_documents contract, applied to classification. Stores follow
+:mod:`parqueryd_spark.streaming.state`."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
+from parqueryd_spark.streaming import state
 
-def _read_meta(spark, nb_dir: str):
-    """(n_buckets, salt) the store was created with, or None if the store
-    has no meta yet. Only a genuinely missing path falls through; corrupt
-    meta or IO errors propagate (the streaming-LM lesson: silently
-    defaulting can serve a model at the wrong feature hash)."""
-    try:
-        meta = spark.read.parquet(os.path.join(nb_dir, "_meta")).collect()[0]
-    except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: "")() or ""
-        if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
-            return None
-        raise
-    return int(meta["n_buckets"]), str(meta["salt"])
+_META_SCHEMA = "n_buckets int, salt string"
+
+
+def _stored_meta(spark, nb_dir: str) -> tuple[int, str]:
+    """(n_buckets, salt) the store was created with; raises if it has none."""
+    stored = state.read_meta(spark, nb_dir)
+    if stored is None:
+        raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
+    return stored
 
 
 def stream_maintain_nb(
@@ -42,11 +35,10 @@ def stream_maintain_nb(
     salt: str = "nb",
 ):
     """Continuously-trained NB state: per micro-batch, one sparse
-    count-partial table (nb_count_partials) in an idempotent ``batch=<id>``
-    partition — the partials ARE the model's sufficient statistics, so
-    :func:`read_nb_model` serves the model of EVERYTHING seen by summing
-    kilobytes of counts, bit-identical to a one-shot retrain, without ever
-    re-reading raw text. (n_buckets, salt) define the feature hash and are
+    count-partial table (nb_count_partials) — the partials ARE the model's
+    sufficient statistics, so :func:`read_nb_model` serves the model of
+    EVERYTHING seen by summing kilobytes of counts, bit-identical to a
+    one-shot retrain, without ever re-reading raw text. (n_buckets, salt) define the feature hash and are
     constant for the STORE's lifetime: they persist in ``<nb_dir>/_meta`` on
     first creation and a restart with different values raises instead of
     silently mixing hash spaces (the stream_maintain_lm meta contract)."""
@@ -54,33 +46,21 @@ def stream_maintain_nb(
 
     meta_checked = False
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _partial(batch_df: DataFrame) -> DataFrame:
         nonlocal meta_checked
         if not meta_checked:
-            spark = batch_df.sparkSession
-            stored = _read_meta(spark, nb_dir)
-            if stored is not None and stored != (int(n_buckets), str(salt)):
-                raise ValueError(
-                    f"NB store at {nb_dir} was maintained with "
-                    f"(n_buckets, salt)={stored} but this stream requests "
-                    f"({int(n_buckets)}, {salt!r}) — restarting maintenance "
-                    "cannot change the feature hash (older batch partitions "
-                    "would keep the old bucketing); use a fresh nb_dir"
-                )
-            if stored is None:
-                spark.createDataFrame(
-                    [(int(n_buckets), str(salt))], "n_buckets int, salt string"
-                ).write.mode("overwrite").parquet(os.path.join(nb_dir, "_meta"))
+            state.claim_meta(
+                batch_df.sparkSession,
+                nb_dir,
+                (int(n_buckets), str(salt)),
+                _META_SCHEMA,
+                "cannot change the feature hash (older batch partitions would "
+                "keep the old bucketing); use a fresh nb_dir",
+            )
             meta_checked = True
-        part = nb_count_partials(batch_df, label_col, text_col, n_buckets, salt)
-        part.write.mode("overwrite").parquet(os.path.join(nb_dir, f"batch={batch_id}"))
+        return nb_count_partials(batch_df, label_col, text_col, n_buckets, salt)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.maintain(doc_stream, nb_dir, checkpoint_dir, _partial)
 
 
 def read_nb_model(spark, nb_dir: str, alpha: float = 1.0) -> DataFrame:
@@ -91,44 +71,28 @@ def read_nb_model(spark, nb_dir: str, alpha: float = 1.0) -> DataFrame:
     not a serve-time choice); alpha is a serve-time smoothing knob."""
     from parqueryd_spark.operators.classify import nb_model_from_partials
 
-    stored = _read_meta(spark, nb_dir)
-    if stored is None:
-        raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
-    n_buckets, _salt = stored
-    parts = spark.read.parquet(nb_dir).drop("batch")
-    return nb_model_from_partials(parts, n_buckets, alpha)
+    n_buckets, _salt = _stored_meta(spark, nb_dir)
+    return nb_model_from_partials(state.read_parts(spark, nb_dir), n_buckets, alpha)
 
 
 def compact_nb_state(spark, nb_dir: str) -> int:
-    """Fold accumulated per-batch NB count partitions into one ``batch=-1``
-    generation — the count-table compaction contract (streaming/lm.py
-    compact_lm_state) for the classifier's sufficient statistics. Partials
-    are integer counts per (label, bucket) — token counts at bucket >= 0,
-    per-class document counts at the bucket = -1 marker — and both kinds
-    merge by plain addition (the exact fold nb_model_from_partials performs
-    on every serve), so the compacted table finalizes to a bit-identical
-    model while state shrinks from batches x sparse-rows to the global
-    sparse table (<= classes x (n_buckets + 1) rows). The ``_meta``
-    (n_buckets, salt) sidecar rides inside the atomic_publish generation —
-    no reader window ever sees counts detached from their feature-hash
-    parameters. Run between availableNow drains; new batches land beside
-    ``batch=-1`` in the kept hive layout."""
+    """Compact the NB count store. Partials are integer counts per
+    (label, bucket) — token counts at bucket >= 0, per-class document counts
+    at the bucket = -1 marker — and both kinds merge by plain addition (the
+    exact fold nb_model_from_partials performs on every serve), so the
+    compacted table finalizes to a bit-identical model while state shrinks
+    from batches × sparse-rows to the global sparse table
+    (<= classes × (n_buckets + 1) rows). The ``_meta`` (n_buckets, salt)
+    sidecar travels inside the new generation."""
     from pyspark.sql import functions as F
 
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    stored = _read_meta(spark, nb_dir)
-    if stored is None:
-        raise ValueError(f"NB store at {nb_dir} has no _meta — nothing maintained yet?")
-    parts = spark.read.parquet(nb_dir).drop("batch")
-    merged = (
-        parts.groupBy("label", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .withColumn("batch", F.lit(-1))
+    meta_df = spark.createDataFrame([_stored_meta(spark, nb_dir)], _META_SCHEMA)
+    return state.compact(
+        spark,
+        nb_dir,
+        lambda parts: parts.groupBy("label", "bucket").agg(F.sum("c").cast("long").alias("c")),
+        sidecars=[(meta_df, "_meta")],
     )
-    meta_df = spark.createDataFrame([stored], "n_buckets int, salt string")
-    atomic_publish(merged, nb_dir, partition_by=["batch"], sidecars=[(meta_df, "_meta")])
-    return spark.read.parquet(nb_dir).count()
 
 
 def stream_classify_documents(
@@ -144,18 +108,14 @@ def stream_classify_documents(
     """Classify an incoming document stream against a frozen NB model
     (the dense (label, bucket, logp, logprior) table from
     operators/classify.nb_train, typically read back from an
-    atomic_publish'd path), landing (id, label, score) per batch in
-    idempotent ``batch=<id>`` partitions. ``n_buckets``/``salt`` must match
-    the values the model was trained with — they define the feature hash."""
+    atomic_publish'd path), landing (id, label, score) per batch under
+    ``scores_dir``. ``n_buckets``/``salt`` must match the values the model
+    was trained with — they define the feature hash."""
     from parqueryd_spark.operators.classify import nb_score
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = nb_score(batch_df, model, id_col, text_col, n_buckets, salt)
-        out.write.mode("overwrite").parquet(os.path.join(scores_dir, f"batch={batch_id}"))
-
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        doc_stream,
+        scores_dir,
+        checkpoint_dir,
+        lambda df: nb_score(df, model, id_col, text_col, n_buckets, salt),
     )

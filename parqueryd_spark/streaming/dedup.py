@@ -6,10 +6,8 @@ of :func:`parqueryd_spark.operators.dedup.incremental_minhash_pairs`.
 Why foreachBatch instead of stateful operators: the dedup "state" here is the
 corpus signature index, which must (a) outlive the stream, (b) be shared with
 batch pipelines, and (c) scale past executor state stores. A parquet dataset
-partitioned by batch id gives all three: per-batch output is written with
-OVERWRITE into its own ``batch=<id>`` partition, so a replayed micro-batch
-(at-least-once foreachBatch) rewrites the same partition instead of
-duplicating rows — idempotent, hence effectively exactly-once.
+partitioned by batch id gives all three; its replay and compaction contract
+is :mod:`parqueryd_spark.streaming.state`'s.
 
 Scale posture: per trigger the work is |batch| signature builds + a
 band-bucket join against the stored index — the index is never re-shingled,
@@ -19,13 +17,11 @@ in PRIOR batches are dropped too (Jaccard 1.0 >= any threshold).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.dedup import incremental_minhash_pairs, minhash_index
-from parqueryd_spark.sources.fs import HadoopFS
+from parqueryd_spark.streaming import state
 
 
 def stream_near_dedup(
@@ -55,26 +51,11 @@ def stream_near_dedup(
             batch_df.select(id_col, text_col), id_col, text_col, k, num_hashes
         ).persist()
         try:
-            # Probe through Hadoop FileSystem so the index is found on any
-            # scheme Spark can read (an os.path probe on s3a:// is always
-            # False, which would silently dedup against an empty corpus —
-            # a correctness failure, not a crash). Exclude this batch's OWN
-            # partition from the corpus read: on crash-recovery replay a
-            # half-written batch=<id> dir may already exist, and listing it
-            # into `corpus` while lazily overwriting it below would delete
-            # the files before the scan tasks read them (FileNotFound on
-            # every restart). The partition filter prunes those files out.
-            fs = HadoopFS(spark, index_dir)
-            if fs.is_dir(index_dir) and any(
-                d.startswith("batch=") for d in fs.listdir(index_dir)
-            ):
-                corpus = (
-                    spark.read.parquet(index_dir)
-                    .where(F.col("batch") != F.lit(batch_id))
-                    .select("doc", "sh", "sig")
-                )
-            else:
+            corpus = state.standing(spark, index_dir, batch_id)
+            if corpus is None:
                 corpus = spark.createDataFrame([], new_idx.schema)
+            else:
+                corpus = corpus.select("doc", "sh", "sig")
             pairs = incremental_minhash_pairs(
                 new_idx, corpus, num_hashes, bands, threshold
             )
@@ -96,19 +77,11 @@ def stream_near_dedup(
                 .otherwise(F.col("id_b"))  # both new: drop the larger
                 .alias("doc")
             ).distinct()
-            kept = new_idx.join(drop, "doc", "left_anti")
-            kept.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"batch={batch_id}")
-            )
+            state.land(new_idx.join(drop, "doc", "left_anti"), index_dir, batch_id)
         finally:
             new_idx.unpersist()
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.drain(doc_stream, checkpoint_dir, _process)
 
 
 def read_index(spark, index_dir: str) -> DataFrame:
@@ -118,24 +91,14 @@ def read_index(spark, index_dir: str) -> DataFrame:
 
 
 def compact_index(spark, index_dir: str, target_partitions: int = 8) -> int:
-    """Fold the accumulated ``batch=<id>`` partitions into one ``batch=-1``
-    generation. Long-running streams add a partition directory per
-    micro-batch; left alone, ``read_index`` scan planning degrades into file
-    listing. The rewrite goes through ``atomic_publish`` (readers flip
-    generations atomically, rollback on failure) and keeps the hive ``batch``
-    layout so the stream's index-exists probe and per-batch overwrite
-    contract still hold — future micro-batches land beside ``batch=-1`` under
-    their own ids. Run it between availableNow drains (no concurrent writer).
-    Returns the compacted row count."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    df = (
-        read_index(spark, index_dir)
-        .withColumn("batch", F.lit(-1))
-        .repartition(target_partitions)
+    """Compact the minhash index. Index rows are a SET of survivors (one row
+    per kept doc), so the merge is the union itself — re-spread over
+    ``target_partitions`` files — and the stream's index probe and per-batch
+    overwrite contract still hold afterwards. Returns the compacted row
+    count."""
+    return state.compact(
+        spark, index_dir, lambda parts: parts.select("doc", "sh", "sig").repartition(target_partitions)
     )
-    atomic_publish(df, index_dir, partition_by=["batch"])
-    return read_index(spark, index_dir).count()
 
 
 def stream_substring_dedup(
@@ -169,37 +132,23 @@ def stream_substring_dedup(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = batch_df.select(id_col, text_col)
-        fs = HadoopFS(spark, index_dir)
-        if fs.is_dir(index_dir) and any(
-            d.startswith("batch=") for d in fs.listdir(index_dir)
-        ):
-            # exclude this batch's own (possibly half-written, crash-replay)
-            # partition from the standing read — same rationale as above
-            raw = spark.read.parquet(index_dir).where(F.col("batch") != F.lit(batch_id))
+        raw = state.standing(spark, index_dir, batch_id)
+        if raw is None:
+            standing = spark.createDataFrame([], "digest binary")
+        else:
             # keep the recorded window length so a restart at the wrong
             # min_tokens raises instead of silently matching nothing
-            cols = ["digest"] + (["n"] if "n" in raw.columns else [])
-            standing = raw.select(*cols)
-        else:
-            standing = spark.createDataFrame([], "digest binary")
+            standing = raw.select("digest", *(["n"] if "n" in raw.columns else []))
         drops = substring_dedup_increment(
             docs, standing, id_col, text_col, min_tokens, mode="droplist"
         )
-        rebuilt = apply_token_droplist(docs, drops, id_col, text_col)
-        rebuilt.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
+        state.land(apply_token_droplist(docs, drops, id_col, text_col), out_dir, batch_id)
         new_digests = substring_index(docs, id_col, text_col, min_tokens).join(
             standing, "digest", "left_anti"
         )
-        new_digests.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
+        state.land(new_digests, index_dir, batch_id)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.drain(doc_stream, checkpoint_dir, _process)
 
 
 def stream_substring_decontaminate(
@@ -225,17 +174,10 @@ def stream_substring_decontaminate(
     never read here — only its digests."""
     from parqueryd_spark.operators.dedup import substring_decontaminate
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        taint = spark.read.parquet(contamination_index_dir)
-        out = substring_decontaminate(
+    def _partial(batch_df: DataFrame) -> DataFrame:
+        taint = batch_df.sparkSession.read.parquet(contamination_index_dir)
+        return substring_decontaminate(
             batch_df.select(id_col, text_col), taint, id_col, text_col, min_tokens
         )
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.maintain(doc_stream, out_dir, checkpoint_dir, _partial)

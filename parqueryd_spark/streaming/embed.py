@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from parqueryd_spark.streaming import state
+
 
 def stream_embed_into_ivfsq(
     doc_stream: DataFrame,
@@ -66,12 +68,7 @@ def stream_embed_into_ivfsq(
         else:
             ivfsq_append(spark, index_dir, emb, batch=f"stream-{batch_id}")
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.drain(doc_stream, checkpoint_dir, _process)
 
 
 def stream_ann_serve(
@@ -94,7 +91,7 @@ def stream_ann_serve(
     1-byte codes, JVM fold scoring, exact rounded-cosine re-rank of the
     refine*k shortlist against ``corpus_path`` (reads |batch| x refine x k
     full-precision rows, never the corpus) — and the per-query top-k lands
-    in an idempotent ``batch=<id>`` partition of ``out_dir``.
+    under ``out_dir``.
 
     Stateless per batch (the frozen-model pattern of streaming/lm.py's
     scorer): batch N of the stream equals a batch ``ivfsq_search`` over
@@ -103,19 +100,13 @@ def stream_ann_serve(
     partitions exist, exactly like the batch serve path."""
     from parqueryd_spark.operators.squant import ivfsq_load, ivfsq_search
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _partial(batch_df: DataFrame) -> DataFrame:
         spark = batch_df.sparkSession
         codes, cents, lo, step = ivfsq_load(spark, index_dir)
         corpus = spark.read.parquet(corpus_path)
-        out = ivfsq_search(
+        return ivfsq_search(
             codes, cents, lo, step, batch_df, corpus=corpus,
             nprobe=nprobe, k=k, refine=refine, id_col=id_col, vec_col=vec_col,
         )
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-    return (
-        query_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.maintain(query_stream, out_dir, checkpoint_dir, _partial)

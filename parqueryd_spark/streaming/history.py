@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from parqueryd_spark.operators.history import scd2_apply, scd2_init
 from parqueryd_spark.sources.fs import HadoopFS
 from parqueryd_spark.sources.sinks import atomic_publish
+from parqueryd_spark.streaming import state
 
 
 def stream_apply_scd2(
@@ -37,11 +38,10 @@ def stream_apply_scd2(
     ts_col: str,
     compare_cols: list[str] | None = None,
     tiebreak_cols: list[str] | None = None,
-    trigger_available_now: bool = True,
 ):
-    """Start a foreachBatch query folding each micro-batch of changes into
-    the SCD2 history at ``history_dir`` (bootstrapped with ``scd2_init`` on
-    the first batch). Returns the started StreamingQuery."""
+    """Start an availableNow foreachBatch query folding each micro-batch of
+    changes into the SCD2 history at ``history_dir`` (bootstrapped with
+    ``scd2_init`` on the first batch). Returns the started StreamingQuery."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -54,9 +54,4 @@ def stream_apply_scd2(
             merged = scd2_init(batch_df, key_cols, ts_col, compare_cols, tiebreak_cols)
         atomic_publish(merged, history_dir)
 
-    writer = changes_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.drain(changes_stream, checkpoint_dir, _apply)

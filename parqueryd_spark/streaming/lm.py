@@ -3,58 +3,53 @@
 Two directions, mirroring the sketch family's batch/stream symmetry:
 
 - **maintain**: bigram counts are LINEAR (merge = sum matching gram rows),
-  so continuous training is the Count-Min/HLL contract from
-  streaming/rollup.py — each micro-batch lands its own partial count table
-  in an idempotent ``batch=<id>`` partition (replays overwrite themselves,
-  effectively-exactly-once), and the served LM is merge-on-read:
-  ``read_lm`` ≡ ``lm_train`` over the concatenated corpus, bit-exact, by
-  linearity. State per batch is O(distinct grams in the batch).
+  so continuous training follows :mod:`parqueryd_spark.streaming.state` —
+  each micro-batch lands its own partial count table, and the served LM is
+  merge-on-read: ``read_lm`` ≡ ``lm_train`` over the concatenated corpus,
+  bit-exact, by linearity. State per batch is O(distinct grams in the
+  batch).
 - **score**: scoring a document stream against a FROZEN LM is stateless
   per-batch relational work (two equi-joins + an aggregation), so the
   streaming scorer is foreachBatch over the identical batch plan — the same
   frozen-model pattern as streaming/embed.py (frozen grid/centroids): the
   model only moves when a maintenance trigger republishes it.
 
-Model parameters travel WITH the state: ``stream_maintain_lm`` persists a
-``_meta`` file (k, n) next to the batch partitions (the leading underscore
-hides it from the merge-on-read parquet listing), and ``read_lm`` reads it
-back — maintaining with n=3 then loading can never silently split grams at
-the wrong position.
+Model parameters travel WITH the state: ``stream_maintain_lm`` records
+(k, n) as the store's ``_meta``, and ``read_lm`` reads it back — maintaining
+with n=3 then loading can never silently split grams at the wrong position.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.lm import NgramLM, lm_merge, lm_score, ngram_counts
+from parqueryd_spark.streaming import state
+
+_META_SCHEMA = "k double, n int"
 
 
-def _read_meta(spark, lm_dir: str) -> tuple[float, int] | None:
-    """The persisted (k, n) for an LM store, or None for the documented
-    pre-meta layout (missing ``_meta`` path). Only the missing-path
-    AnalysisException maps to None — corrupt meta, permission failures, and
-    every other error propagate instead of silently degrading to defaults."""
-    try:
-        meta = spark.read.parquet(os.path.join(lm_dir, "_meta")).collect()[0]
-    except AnalysisException as e:
-        cls = getattr(e, "getErrorClass", lambda: "")() or ""
-        if "PATH_NOT_FOUND" in cls or "Path does not exist" in str(e):
-            return None
-        raise  # corrupt meta / unreadable store — never silently default
-    return float(meta["k"]), int(meta["n"])
+def _check_order(parts: DataFrame, n: int) -> None:
+    """Full-scan gram-width validation: EVERY stored gram's token count must
+    equal ``n`` (min == max == n in one aggregation, not a sampled row) —
+    raises on a store at a different or mixed order."""
+    toks = F.size(F.split("gram", " "))
+    probe = parts.agg(F.min(toks).alias("lo"), F.max(toks).alias("hi")).collect()[0]
+    if probe["lo"] is not None and not (probe["lo"] == probe["hi"] == n):
+        raise ValueError(
+            f"stored grams have {probe['lo']}..{probe['hi']} tokens but the "
+            f"requested order is n={n} — the model was maintained at a "
+            "different (or mixed) order"
+        )
 
 
 def _validate_order(spark, lm_dir: str, n: int) -> None:
-    """Full-scan gram-width validation: EVERY stored gram's token count must
-    equal ``n`` (min == max == n in one aggregation, not a sampled row) —
-    raises on a store at a different or mixed order. A missing or
-    batch-less store has nothing to validate."""
+    """:func:`_check_order` over the whole store; a missing or batch-less
+    store has nothing to validate."""
     try:
-        parts = spark.read.parquet(lm_dir).drop("batch")
+        parts = state.read_parts(spark, lm_dir)
     except AnalysisException as e:
         cls = getattr(e, "getErrorClass", lambda: "")() or ""
         if (
@@ -64,14 +59,7 @@ def _validate_order(spark, lm_dir: str, n: int) -> None:
         ):
             return  # nothing stored yet
         raise
-    toks = F.size(F.split("gram", " "))
-    probe = parts.agg(F.min(toks).alias("lo"), F.max(toks).alias("hi")).collect()[0]
-    if probe["lo"] is not None and not (probe["lo"] == probe["hi"] == n):
-        raise ValueError(
-            f"stored grams have {probe['lo']}..{probe['hi']} tokens but the "
-            f"requested order is n={n} — the model was maintained at a "
-            "different (or mixed) order"
-        )
+    _check_order(parts, n)
 
 
 def stream_maintain_lm(
@@ -83,14 +71,14 @@ def stream_maintain_lm(
     k: float = 0.5,
 ):
     """Continuously-trained LM state: per micro-batch, one partial
-    (gram, c) count table in ``batch=<id>`` (idempotent overwrite). Raw text
-    is never re-read at serve time — the partials ARE the model. The (k, n)
-    meta rides along in ``<lm_dir>/_meta`` so ``read_lm`` serves the model
-    at the order it was maintained with. Restarting maintenance over an
-    EXISTING store validates against its recorded (k, n) instead of
-    overwriting — different parameters would leave older batch partitions at
-    the old order while the meta claims the new one, exactly the silent
-    mixed-order store the meta exists to prevent.
+    (gram, c) count table. Raw text is never re-read at serve time — the
+    partials ARE the model. The (k, n) meta rides along in ``<lm_dir>/_meta``
+    so ``read_lm`` serves the model at the order it was maintained with.
+    Restarting maintenance over an EXISTING store validates against its
+    recorded (k, n) instead of overwriting — different parameters would
+    leave older batch partitions at the old order while the meta claims the
+    new one, exactly the silent mixed-order store the meta exists to
+    prevent.
 
     Write-time order enforcement (r15): adopting a PRE-meta store (batches
     present, no ``_meta``) runs the full gram-width validation ONCE, before
@@ -102,39 +90,26 @@ def stream_maintain_lm(
 
     meta_checked = False
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _partial(batch_df: DataFrame) -> DataFrame:
         nonlocal meta_checked
         if not meta_checked:
             # (k, n) are constant for the STORE's lifetime, not just this
-            # stream's: honor any existing meta (raise on mismatch), write
-            # ours only on first creation
+            # stream's; adopting a pre-meta store first checks its existing
+            # grams ARE at this stream's order
             spark = batch_df.sparkSession
-            stored = _read_meta(spark, lm_dir)
-            if stored is not None and stored != (float(k), int(n)):
-                raise ValueError(
-                    f"LM store at {lm_dir} was maintained with (k, n)={stored} "
-                    f"but this stream requests ({float(k)}, {int(n)}) — "
-                    "restarting maintenance cannot change model parameters "
-                    "(older batch partitions would keep the old order); use a "
-                    "fresh lm_dir to retrain"
-                )
-            if stored is None:
-                # adopting a pre-meta store: its existing grams must BE at
-                # this stream's order before the meta certifies them
-                _validate_order(spark, lm_dir, int(n))
-                spark.createDataFrame([(float(k), int(n))], "k double, n int").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(lm_dir, "_meta"))
+            state.claim_meta(
+                spark,
+                lm_dir,
+                (float(k), int(n)),
+                _META_SCHEMA,
+                "cannot change model parameters (older batch partitions would "
+                "keep the old order); use a fresh lm_dir to retrain",
+                adopt=lambda: _validate_order(spark, lm_dir, int(n)),
+            )
             meta_checked = True
-        part = ngram_counts(batch_df, text_col, n)
-        part.write.mode("overwrite").parquet(os.path.join(lm_dir, f"batch={batch_id}"))
+        return ngram_counts(batch_df, text_col, n)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.maintain(doc_stream, lm_dir, checkpoint_dir, _partial)
 
 
 def read_lm(
@@ -165,55 +140,34 @@ def read_lm(
     forces the scan regardless (e.g. serving a store whose files were
     manipulated outside the maintenance contract); ``validate=False``
     skips it even for pre-meta stores (caller-asserted order)."""
-    stored = _read_meta(spark, lm_dir)
+    stored = state.read_meta(spark, lm_dir)
     k = k if k is not None else (stored[0] if stored is not None else 0.5)
     n = n if n is not None else (stored[1] if stored is not None else 2)
-    parts = spark.read.parquet(lm_dir).drop("batch")
+    parts = state.read_parts(spark, lm_dir)
     if validate is None:
         validate = stored is None or int(n) != stored[1]
     if validate:
-        toks = F.size(F.split("gram", " "))
-        probe = parts.agg(F.min(toks).alias("lo"), F.max(toks).alias("hi")).collect()[0]
-        if probe["lo"] is not None and not (probe["lo"] == probe["hi"] == n):
-            raise ValueError(
-                f"stored grams have {probe['lo']}..{probe['hi']} tokens but the "
-                f"requested order is n={n} — the model was maintained at a "
-                "different (or mixed) order"
-            )
+        _check_order(parts, n)
     return lm_merge([parts], k, n)
 
 
 def compact_lm_state(spark, lm_dir: str) -> int:
-    """Fold accumulated per-batch LM count partitions into one ``batch=-1``
-    generation — the sketch-compaction contract (streaming/rollup.py
-    compact_kmv_state) applied to the count-table model family. N-gram
-    counts are LINEAR (merge = sum matching gram rows — the exact fold
-    :func:`read_lm` performs on every serve), so the compacted (gram, c)
-    table is bit-identical model state: scores are unchanged while the
-    store shrinks from batches x distinct-grams-per-batch rows to global
-    distinct grams, and serve-time scan planning stops paying a file
-    listing that grows with maintenance age (~1e5 partitions after a year
-    of 5-minute triggers). The ``_meta`` (k, n) sidecar travels INSIDE the
-    atomic_publish generation, so no reader window ever sees counts without
-    their model parameters (or defaults silently substituted). Run between
-    availableNow drains; a checkpointed stream never replays batches that
-    predate the compaction, and new batches land beside ``batch=-1`` in
-    the kept hive layout."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    stored = _read_meta(spark, lm_dir)
-    parts = spark.read.parquet(lm_dir).drop("batch")
-    merged = (
-        parts.groupBy("gram")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .withColumn("batch", F.lit(-1))
-    )
+    """Compact the LM count store. N-gram counts are LINEAR (merge = sum
+    matching gram rows — the exact fold :func:`read_lm` performs on every
+    serve), so the compacted (gram, c) table is bit-identical model state:
+    scores are unchanged while the store shrinks from batches ×
+    distinct-grams-per-batch rows to global distinct grams. The ``_meta``
+    (k, n) sidecar travels inside the new generation."""
+    stored = state.read_meta(spark, lm_dir)
     sidecars = None
     if stored is not None:
-        meta_df = spark.createDataFrame([stored], "k double, n int")
-        sidecars = [(meta_df, "_meta")]
-    atomic_publish(merged, lm_dir, partition_by=["batch"], sidecars=sidecars)
-    return spark.read.parquet(lm_dir).count()
+        sidecars = [(spark.createDataFrame([stored], _META_SCHEMA), "_meta")]
+    return state.compact(
+        spark,
+        lm_dir,
+        lambda parts: parts.groupBy("gram").agg(F.sum("c").cast("long").alias("c")),
+        sidecars=sidecars,
+    )
 
 
 def stream_score_documents(
@@ -226,26 +180,17 @@ def stream_score_documents(
     smoothing: str = "add_k",
 ):
     """Score an incoming document stream against a frozen LM, landing
-    (id, n_bigrams, avg_nll, ppl) per batch in idempotent ``batch=<id>``
-    partitions — batch-equivalent to the batch scorer row-for-row.
+    (id, n_bigrams, avg_nll, ppl) per batch under ``scores_dir`` —
+    batch-equivalent to the batch scorer row-for-row.
     ``smoothing`` selects the scorer over the SAME frozen count table:
     ``"add_k"`` (operators/lm.lm_score) or ``"kn"`` (operators/lm.kn_score,
     interpolated Kneser–Ney — any order n >= 2 since r14)."""
     if smoothing not in ("add_k", "kn"):
         raise ValueError(f"smoothing must be 'add_k' or 'kn', got {smoothing!r}")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if smoothing == "kn":
-            from parqueryd_spark.operators.lm import kn_score
-
-            out = kn_score(batch_df, id_col, lm, text_col)
-        else:
-            out = lm_score(batch_df, id_col, lm, text_col)
-        out.write.mode("overwrite").parquet(os.path.join(scores_dir, f"batch={batch_id}"))
-
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    if smoothing == "kn":
+        from parqueryd_spark.operators.lm import kn_score as score
+    else:
+        score = lm_score
+    return state.maintain(
+        doc_stream, scores_dir, checkpoint_dir, lambda df: score(df, id_col, lm, text_col)
     )

@@ -7,18 +7,16 @@ manifest) never go stale under continuous ingest.
 Why this shape at scale: a 100 TB dataset under continuous ingest adds a few
 files per trigger; ``refresh_manifest`` footer-sweeps ONLY those (O(new
 files), never the standing corpus) and drops rows for files a replayed batch
-overwrote. The manifest republishes through the same write-then-swap pattern
-the data uses, so readers either see the previous complete generation or the
-new one — and even a reader racing a swap stays CORRECT, because round 9's
-staleness guard makes ``scan_pruned``/``count_pruned`` conservatively keep
-any live file the manifest doesn't cover (a stale manifest costs speed,
-never rows).
+overwrote. The manifest republishes through ``sources/sinks.atomic_publish``,
+so readers either see the previous complete generation or the new one — and
+even a reader racing a swap stays CORRECT, because round 9's staleness guard
+makes ``scan_pruned``/``count_pruned`` conservatively keep any live file the
+manifest doesn't cover (a stale manifest costs speed, never rows).
 
-Replay safety: data lands with ``mode=overwrite`` into its own ``batch=<id>``
-directory (the at-least-once contract every streaming sink here follows), and
-the refresh reconciles the manifest against the ACTUAL file listing — a
-replayed batch's rewritten part-files displace their predecessors' rows
-automatically.
+Replay safety: data lands under the :mod:`parqueryd_spark.streaming.state`
+replay contract, and the refresh reconciles the manifest against the ACTUAL
+file listing — a replayed batch's rewritten part-files displace their
+predecessors' rows automatically.
 """
 
 from __future__ import annotations
@@ -26,6 +24,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from parqueryd_spark.sources.sinks import atomic_publish
+from parqueryd_spark.streaming import state
 
 
 def stream_ingest_with_manifest(
@@ -51,50 +52,26 @@ def stream_ingest_with_manifest(
         refresh_manifest,
     )
 
-    def _swap_in(mf: DataFrame, base_dir: str, batch_id: int) -> None:
-        # write-then-swap: stage the new generation, then replace — readers
-        # hold the old generation's file handles or fall back to the
-        # conservative keep-uncovered path mid-swap
-        import shutil
-
-        live = os.path.join(base_dir, "live")
-        stage = os.path.join(base_dir, f"stage-{batch_id}")
-        mf.write.mode("overwrite").parquet(stage)
-        old = os.path.join(base_dir, f"old-{batch_id}")
-        if os.path.isdir(live):
-            os.replace(live, old)
-        os.replace(stage, live)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(data_dir, f"batch={batch_id}")
-        )
+        state.land(batch_df, data_dir, batch_id)
+        # readers racing a publish hold the old generation's file handles or
+        # fall back to the conservative keep-uncovered path
         live = os.path.join(manifest_dir, "live")
         if os.path.isdir(live):
             mf = refresh_manifest(spark, data_dir, spark.read.parquet(live), columns)
         else:
             mf = build_manifest(spark, data_dir, columns)
-        _swap_in(mf, manifest_dir, batch_id)
+        atomic_publish(mf, live)
         for col in bloom_cols or []:
-            bdir = os.path.join(manifest_dir, f"bloom={col}")
-            blive = os.path.join(bdir, "live")
+            blive = os.path.join(manifest_dir, f"bloom={col}", "live")
             if os.path.isdir(blive):
-                bm = refresh_bloom_manifest(
-                    spark, data_dir, col, spark.read.parquet(blive)
-                )
+                bm = refresh_bloom_manifest(spark, data_dir, col, spark.read.parquet(blive))
             else:
                 bm = bloom_manifest(spark, data_dir, col, fpp=bloom_fpp)
-            _swap_in(bm, bdir, batch_id)
+            atomic_publish(bm, blive)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.drain(stream, checkpoint_dir, _process)
 
 
 def read_pruned(

@@ -10,17 +10,14 @@ megabytes parquet row read once per batch. A batch with NO bloom hits (the
 common case for clean streams) never touches the benchmark table at all; a
 batch with hits probes it with a semi join whose build side is the tiny
 maybe-key set, so the benchmark is scanned but never shuffled. Output lands
-in idempotent ``batch=<id>`` partitions (overwrite-on-replay, the same
-at-least-once contract as streaming/dedup.py), so crash-recovery replays
-cannot duplicate clean rows.
+per batch under the :mod:`parqueryd_spark.streaming.state` replay contract,
+so crash-recovery replays cannot duplicate clean rows.
 
 The result is EXACT (equals batch ``NOT IN`` semantics): the bloom has no
 false negatives, and every maybe-row is verified against the true key set.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,6 +27,7 @@ from parqueryd_spark.operators.membership import (
     bloom_params,
     with_bloom_flag,
 )
+from parqueryd_spark.streaming import state
 
 
 def publish_bloom(
@@ -64,7 +62,7 @@ def stream_decontaminate(
     each micro-batch to ``out_dir/batch=<id>``. Returns the started
     StreamingQuery (callers ``awaitTermination()``)."""
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _partial(batch_df: DataFrame) -> DataFrame:
         spark = batch_df.sparkSession
         bloom = spark.read.parquet(bloom_dir)
         maybe_keys = (
@@ -74,29 +72,20 @@ def stream_decontaminate(
             .distinct()
         )
         if maybe_keys.isEmpty():
-            clean = batch_df
-        else:
-            # benchmark ⋉ maybe: build side is the tiny maybe set, so the
-            # benchmark table is scanned (once, this batch only) but never
-            # shuffled; the verified contaminated set is then broadcast into
-            # the final anti join.
-            contaminated = (
-                spark.read.parquet(bench_parquet)
-                .select(key_col)
-                .join(maybe_keys, key_col, "left_semi")
-                .distinct()
-            )
-            clean = batch_df.join(contaminated, key_col, "left_anti")
-        clean.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+            return batch_df
+        # benchmark ⋉ maybe: build side is the tiny maybe set, so the
+        # benchmark table is scanned (once, this batch only) but never
+        # shuffled; the verified contaminated set is then broadcast into the
+        # final anti join.
+        contaminated = (
+            spark.read.parquet(bench_parquet)
+            .select(key_col)
+            .join(maybe_keys, key_col, "left_semi")
+            .distinct()
         )
+        return batch_df.join(contaminated, key_col, "left_anti")
 
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.maintain(doc_stream, out_dir, checkpoint_dir, _partial)
 
 
 def read_clean(spark, out_dir: str) -> DataFrame:

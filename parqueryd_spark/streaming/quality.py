@@ -4,22 +4,21 @@ appended to a parquet metrics dataset — the observability loop that catches a
 broken upstream feed (sudden nulls, duplicate keys, out-of-range values)
 before it lands in the serving tables.
 
-Per-batch results write with OVERWRITE into their own ``batch=<id>``
-partition (the idempotent-replay pattern shared with streaming/dedup and
-streaming/rollup), so an at-least-once foreachBatch replay rewrites the same
+Per-batch results land under the :mod:`parqueryd_spark.streaming.state`
+replay contract, so an at-least-once foreachBatch replay rewrites its own
 partition instead of double-reporting. The metrics dataset is tiny — one row
 per check per trigger — and reads as a time series of feed health.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.quality import quality_report
+from parqueryd_spark.streaming import state
 
 
 def stream_quality_monitor(
@@ -28,10 +27,9 @@ def stream_quality_monitor(
     checkpoint_dir: str,
     checks_fn: Callable[[DataFrame], list[DataFrame]],
     fail_fast: bool = False,
-    trigger_available_now: bool = True,
 ):
-    """Start a foreachBatch query writing each micro-batch's quality report
-    to ``metrics_dir``. ``checks_fn`` maps the batch to its check list (the
+    """Start an availableNow foreachBatch query writing each micro-batch's
+    quality report to ``metrics_dir``. ``checks_fn`` maps the batch to its check list (the
     ``quality_report`` inputs — uniqueness, nulls, ranges, foreign keys
     against reference tables, ...). With ``fail_fast`` the stream STOPS on
     the first failing batch (the report is still written first, so the
@@ -42,9 +40,7 @@ def stream_quality_monitor(
         rep = quality_report(checks_fn(batch_df)).withColumn(
             "n_batch_rows", F.lit(batch_df.count())
         )
-        rep.write.mode("overwrite").parquet(
-            os.path.join(metrics_dir, f"batch={batch_id}")
-        )
+        state.land(rep, metrics_dir, batch_id)
         if fail_fast:
             failed = [r.check for r in rep.collect() if not r.passed]
             if failed:
@@ -52,12 +48,7 @@ def stream_quality_monitor(
                     f"quality gate failed on batch {batch_id}: {failed}"
                 )
 
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.drain(stream_df, checkpoint_dir, _process)
 
 
 def read_quality_metrics(spark, metrics_dir: str) -> DataFrame:
@@ -81,23 +72,15 @@ def stream_flag_outliers(
     flag_with_baselines join — the frozen-model pattern of streaming/lm.py
     and streaming/embed.py, and the property that matters for monitoring:
     a burst of anomalies cannot drag the yardstick it is judged against.
-    Flagged batches land in idempotent ``batch=<id>`` partitions;
-    batch-equivalence to the batch operator is row-for-row."""
-    import os
-
+    Flagged batches land under ``flagged_dir``; batch-equivalence to the
+    batch operator is row-for-row."""
     from parqueryd_spark.operators.analytics import flag_with_baselines
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = flag_with_baselines(
-            batch_df, baselines, list(keys), value_col, threshold
-        )
-        out.write.mode("overwrite").parquet(os.path.join(flagged_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        event_stream,
+        flagged_dir,
+        checkpoint_dir,
+        lambda df: flag_with_baselines(df, baselines, list(keys), value_col, threshold),
     )
 
 
@@ -113,21 +96,17 @@ def stream_calibrate_scores(
     """Serve the FROZEN quality gate over a stream: each micro-batch is
     scored against a published per-group CDF (operators/quality.py:
     calibration_cdf) by the same step lookup the batch operator uses —
-    batch-equivalent row-for-row — landing (id, group, score, calib) in
-    idempotent ``batch=<id>`` partitions. This is the production shape of
+    batch-equivalent row-for-row — landing (id, group, score, calib) under
+    ``scores_dir``. This is the production shape of
     pipeline_calibration_serve: thresholds stay fixed at the published
     reference distribution no matter how skewed an arriving batch is; the
     gate only moves when maintenance republishes the CDF (the frozen-model
     contract shared with stream_score_documents / stream_flag_outliers)."""
     from parqueryd_spark.operators.quality import calibration_score
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = calibration_score(ref_cdf, batch_df, group_col, score_col, id_col)
-        out.write.mode("overwrite").parquet(os.path.join(scores_dir, f"batch={batch_id}"))
-
-    return (
-        new_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        new_stream,
+        scores_dir,
+        checkpoint_dir,
+        lambda df: calibration_score(ref_cdf, df, group_col, score_col, id_col),
     )

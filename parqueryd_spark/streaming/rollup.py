@@ -1,14 +1,13 @@
-"""Continuously-maintained rollups: the streaming face of
-:mod:`parqueryd_spark.operators.rollup`.
+"""Continuously-maintained rollups and sketches: the streaming face of
+:mod:`parqueryd_spark.operators.rollup` and
+:mod:`parqueryd_spark.operators.sketches`.
 
-Each micro-batch lands its mergeable partial aggregates in its own
-``batch=<id>`` partition (idempotent OVERWRITE — a replayed foreachBatch
-rewrites the same partition, so at-least-once delivery still yields
-effectively-exactly-once totals, same contract as
-:mod:`parqueryd_spark.streaming.dedup`). Readers merge-on-read: the rollup is
-grains × keys rows, so folding all partitions at query time is a small
-shuffle, and :func:`compact_rollup` periodically folds history into one
-``batch=-1`` generation so scan planning never degrades into file listing.
+Every store here follows :mod:`parqueryd_spark.streaming.state`: each
+micro-batch lands its family's partial as an idempotent ``batch=<id>``
+partition, readers merge on read, and ``compact_*`` folds the partitions into
+one ``batch=-1`` generation. Each function below contributes only its partial
+or its merge. A rollup is grains × keys rows and a sketch is kilobytes per
+key, so folding all partitions at query time is a small shuffle.
 
 Versus ``writeStream.outputMode("complete")`` over a windowed aggregate:
 complete mode re-emits (and the state store retains) EVERY window ever seen —
@@ -20,12 +19,11 @@ watermark-forced finality, arbitrarily old corrections stay mergeable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parqueryd_spark.operators.rollup import finalize_rollup, merge_rollups, rollup_partials
+from parqueryd_spark.streaming import state
 
 
 def stream_maintain_rollup(
@@ -37,19 +35,13 @@ def stream_maintain_rollup(
     ts_col: str = "ts",
     value_col: str = "value",
 ):
-    """Start an availableNow foreachBatch query appending each micro-batch's
-    partial aggregates as a ``batch=<id>`` partition under ``rollup_dir``.
-    Returns the started StreamingQuery (callers ``awaitTermination()``)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        part = rollup_partials(batch_df, grain, keys, ts_col, value_col)
-        part.write.mode("overwrite").parquet(os.path.join(rollup_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Maintain each micro-batch's partial aggregates (sum/count/min/max per
+    grain × keys) under ``rollup_dir``. Returns the started StreamingQuery."""
+    return state.maintain(
+        event_stream,
+        rollup_dir,
+        checkpoint_dir,
+        lambda df: rollup_partials(df, grain, keys, ts_col, value_col),
     )
 
 
@@ -58,27 +50,20 @@ def read_rollup(
 ) -> DataFrame:
     """The maintained rollup, finalized: merge-on-read over all published
     ``batch=<id>`` partitions (one small shuffle over grains × keys rows)."""
-    parts = spark.read.parquet(rollup_dir).drop("batch")
+    parts = state.read_parts(spark, rollup_dir)
     return finalize_rollup(merge_rollups(parts, keys=keys), keys=keys)
 
 
 def compact_rollup(
     spark, rollup_dir: str, keys: tuple[str, ...] = ("event_type",), target_partitions: int = 4
 ) -> int:
-    """Fold accumulated per-batch partitions into one ``batch=-1`` generation
-    via atomic_publish (readers flip atomically, rollback on failure), keeping
-    the hive ``batch`` layout so future micro-batches land beside it. The
-    stored form stays PARTIAL (not finalized) so merging never stops being
-    possible. Run between availableNow drains. Returns the compacted row
-    count."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    parts = spark.read.parquet(rollup_dir).drop("batch")
-    merged = (
-        merge_rollups(parts, keys=keys).withColumn("batch", F.lit(-1)).repartition(target_partitions)
+    """Compact the rollup store. Sums, counts, mins and maxes are each
+    associative, so the merged partial is the partial of everything seen;
+    it stays PARTIAL (not finalized) so merging never stops being possible.
+    Returns the compacted row count."""
+    return state.compact(
+        spark, rollup_dir, lambda parts: merge_rollups(parts, keys=keys).repartition(target_partitions)
     )
-    atomic_publish(merged, rollup_dir, partition_by=["batch"])
-    return spark.read.parquet(rollup_dir).count()
 
 
 def stream_maintain_histogram(
@@ -94,21 +79,15 @@ def stream_maintain_histogram(
     value_col: str = "value",
 ):
     """Continuously-maintained quantile state: each micro-batch's histogram
-    partials (operators/rollup.histogram_partials) land in an idempotent
-    ``batch=<id>`` partition — the same contract as stream_maintain_rollup,
-    extended to the quantile measures. State per batch is at most
-    bins x grains x keys rows; late data merges in bin-by-bin."""
+    partials (operators/rollup.histogram_partials), at most
+    bins × grains × keys rows per batch; late data merges in bin-by-bin."""
     from parqueryd_spark.operators.rollup import histogram_partials
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        part = histogram_partials(batch_df, lo, hi, bins, grain, keys, ts_col, value_col)
-        part.write.mode("overwrite").parquet(os.path.join(hist_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        event_stream,
+        hist_dir,
+        checkpoint_dir,
+        lambda df: histogram_partials(df, lo, hi, bins, grain, keys, ts_col, value_col),
     )
 
 
@@ -126,7 +105,7 @@ def read_histogram_quantiles(
     histogram_quantiles) — raw events are never touched."""
     from parqueryd_spark.operators.rollup import histogram_quantiles, merge_histograms
 
-    parts = spark.read.parquet(hist_dir).drop("batch")
+    parts = state.read_parts(spark, hist_dir)
     return histogram_quantiles(merge_histograms(parts, keys=keys), probs, lo, hi, bins, keys)
 
 
@@ -141,25 +120,14 @@ def stream_maintain_hll(
     """Continuously-maintained DISTINCT-count state — the streaming face of
     operators/sketches.hll_rollup, closing the one aggregate the
     sum/count/min/max partials above can't merge. Each micro-batch sketches
-    its own rows into one Datasketches HLL binary per key (kilobytes) and
-    lands it in an idempotent ``batch=<id>`` partition — the identical
-    contract as stream_maintain_rollup: replayed batches overwrite their own
-    partition (effectively-exactly-once), late data just lands in a later
-    partition, and because HLL union is register-wise max, DUPLICATED values
-    across batches never double-count — distinct-ness is global by
-    construction, no dedup state store needed. State per batch is keys x
-    ~2^lgk bytes regardless of row volume."""
+    its rows into one Datasketches HLL binary per key (about 2^lgk bytes,
+    regardless of row volume). HLL union is register-wise max, so values
+    DUPLICATED across batches never double-count: distinct-ness is global by
+    construction, with no dedup state store."""
     from parqueryd_spark.operators.sketches import hll_rollup
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        part = hll_rollup(batch_df, list(keys), value_col, lgk)
-        part.write.mode("overwrite").parquet(os.path.join(hll_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        event_stream, hll_dir, checkpoint_dir, lambda df: hll_rollup(df, list(keys), value_col, lgk)
     )
 
 
@@ -171,8 +139,7 @@ def read_hll_distinct(
     raw values. Returns (keys..., n_rows, n_distinct)."""
     from parqueryd_spark.operators.sketches import hll_estimate, hll_rollup_merge
 
-    parts = spark.read.parquet(hll_dir).drop("batch")
-    return hll_estimate(hll_rollup_merge([parts], list(keys)))
+    return hll_estimate(hll_rollup_merge([state.read_parts(spark, hll_dir)], list(keys)))
 
 
 def stream_maintain_kmv(
@@ -186,23 +153,14 @@ def stream_maintain_kmv(
     """Continuously-maintained SET-OPERATION state — the streaming face of
     operators/sketches.kmv_sketch, extending stream_maintain_hll from
     union-only distinct counts to intersections/overlaps. Each micro-batch
-    sketches its rows into one k-minimum-values array per key (<= 8k bytes)
-    in an idempotent ``batch=<id>`` partition; because KMV union is
-    "k smallest of the combined distinct hashes", values repeated across
-    batches collapse at merge time — global distinct-ness with no dedup
-    state store, same as the HLL twin, but the merged state can also
-    intersect across keys (read_kmv_overlap)."""
+    sketches its rows into one k-minimum-values array per key (<= 8k bytes).
+    KMV union is "k smallest of the combined distinct hashes", so values
+    repeated across batches collapse at merge time, and the merged state can
+    also intersect across keys (read_kmv_overlap)."""
     from parqueryd_spark.operators.sketches import kmv_sketch
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        part = kmv_sketch(batch_df, list(keys), value_col, k)
-        part.write.mode("overwrite").parquet(os.path.join(kmv_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        event_stream, kmv_dir, checkpoint_dir, lambda df: kmv_sketch(df, list(keys), value_col, k)
     )
 
 
@@ -213,8 +171,7 @@ def read_kmv_distinct(
     the k-value arrays, never touching raw values."""
     from parqueryd_spark.operators.sketches import kmv_distinct, kmv_merge
 
-    parts = spark.read.parquet(kmv_dir).drop("batch")
-    return kmv_distinct(kmv_merge([parts], list(keys), k), k)
+    return kmv_distinct(kmv_merge([state.read_parts(spark, kmv_dir)], list(keys), k), k)
 
 
 def read_kmv_overlap(
@@ -223,12 +180,9 @@ def read_kmv_overlap(
     """Pairwise overlap estimates across key values from the published state:
     merge each key's batches, then estimate |A ∩ B| / |A ∪ B| per pair from
     the merged sketches — the query HLL state cannot answer."""
-    from pyspark.sql import functions as F
-
     from parqueryd_spark.operators.sketches import kmv_merge, kmv_set_estimates
 
-    parts = spark.read.parquet(kmv_dir).drop("batch")
-    merged = kmv_merge([parts], [key], k)
+    merged = kmv_merge([state.read_parts(spark, kmv_dir)], [key], k)
     a = merged.select(F.col(key).alias("t1"), F.col("kmv").alias("a_kmv"))
     b = merged.select(F.col(key).alias("t2"), F.col("kmv").alias("b_kmv"))
     i_est, u_est = kmv_set_estimates("a", "b", k)
@@ -247,23 +201,16 @@ def stream_maintain_countmin(
     """Continuously-maintained POINT-FREQUENCY state — the streaming face of
     operators/sketches.count_min_sketch, closing the any-key frequency query
     next to the HLL (distinct) and KMV (overlap) twins. Each micro-batch
-    sketches its rows into <= depth x width counter cells in an idempotent
-    ``batch=<id>`` partition; CM is LINEAR (merge = cell sums), so replayed
-    batches overwrite their own partition and totals never double-count,
-    while merge-on-read (:func:`read_countmin_estimates`) stays exact w.r.t.
-    a one-shot sketch of everything seen. State per batch is depth x width
-    cells regardless of row volume."""
+    sketches its rows into <= depth × width counter cells. CM is LINEAR
+    (merge = cell sums), so merge-on-read (:func:`read_countmin_estimates`)
+    is exact w.r.t. a one-shot sketch of everything seen."""
     from parqueryd_spark.operators.sketches import count_min_sketch
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        part = count_min_sketch(batch_df, key_col, width=width, depth=depth, salt=salt)
-        part.write.mode("overwrite").parquet(os.path.join(cm_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.maintain(
+        event_stream,
+        cm_dir,
+        checkpoint_dir,
+        lambda df: count_min_sketch(df, key_col, width=width, depth=depth, salt=salt),
     )
 
 
@@ -280,27 +227,21 @@ def stream_maintain_heavy_hitters(
     matrix (HLL: distinct, KMV: set ops, CM: point frequency, MG: top-k by
     frequency). Each micro-batch writes its per-partition Misra-Gries
     summaries — ≤ capacity counter rows per partition plus one NULL-key row
-    carrying that partition's eviction error — into an idempotent
-    ``batch=<id>`` partition. MG summaries merge by plain counter ADDITION
-    with errors adding, so merge-on-read over any set of batches is itself a
-    valid MG summary of everything they saw: est ≤ true ≤ est + Σ err holds
-    globally, replays overwrite their own partition, and state per batch is
-    bounded by capacity × partitions rows regardless of volume.
+    carrying that partition's eviction error. MG summaries merge by plain
+    counter ADDITION with errors adding, so merge-on-read over any set of
+    batches is itself a valid MG summary of everything they saw:
+    est ≤ true ≤ est + Σ err holds globally.
     ``weight_col`` (integer, non-negative) switches the counters from
     occurrence counts to weight sums — the streaming face of the weighted
     top-k (running revenue-by-key / bytes-by-token state)."""
     from parqueryd_spark.operators.sketches import _mg_summaries
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        cols = [key_col] if weight_col is None else [key_col, weight_col]
-        part = _mg_summaries(batch_df.select(*cols), key_col, int(capacity), weight_col)
-        part.write.mode("overwrite").parquet(os.path.join(hh_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    cols = [key_col] if weight_col is None else [key_col, weight_col]
+    return state.maintain(
+        event_stream,
+        hh_dir,
+        checkpoint_dir,
+        lambda df: _mg_summaries(df.select(*cols), key_col, int(capacity), weight_col),
     )
 
 
@@ -312,9 +253,7 @@ def read_heavy_hitters(
     never touching raw events. Returns (key_col, est_count, max_undercount)
     ordered by est_count desc, key asc — the same contract as the batch
     operator, so the undercount invariant stays checkable at serve time."""
-    from pyspark.sql import functions as F
-
-    parts = spark.read.parquet(hh_dir).drop("batch")
+    parts = state.read_parts(spark, hh_dir)
     bound = parts.where(F.col("key").isNull()).agg(F.sum("err").alias("max_undercount"))
     merged = (
         parts.where(F.col("key").isNotNull()).groupBy("key").agg(F.sum("cnt").alias("est_count"))
@@ -360,28 +299,22 @@ def stream_maintain_heavy_hitters_grouped(
     language, hot URLs per domain, heavy spenders per tenant). Each
     micro-batch writes its grouped Misra-Gries summaries — ≤ capacity
     counter rows per (partition, group) plus one NULL-key marker per
-    (partition, group) carrying that group's eviction error — into an
-    idempotent ``batch=<id>`` partition. Grouped MG summaries merge by
-    counter addition WITHIN each group with per-group errors adding, so
-    merge-on-read over any batch set is a valid grouped summary of
-    everything seen: est ≤ true ≤ est + Σ err_g holds per group.
+    (partition, group) carrying that group's eviction error. Grouped MG
+    summaries merge by counter addition WITHIN each group with per-group
+    errors adding, so est ≤ true ≤ est + Σ err_g holds per group.
     ``weight_col`` (integer, NON-NEGATIVE — enforced in the sketch fold)
     switches the counters to weight sums, mirroring
     operators/sketches.heavy_hitters_exact_topk_grouped's weighted face."""
     from parqueryd_spark.operators.sketches import _mg_summaries_grouped
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        cols = [group_col, key_col] + ([] if weight_col is None else [weight_col])
-        part = _mg_summaries_grouped(
-            batch_df.select(*cols), group_col, key_col, int(capacity), weight_col
-        )
-        part.write.mode("overwrite").parquet(os.path.join(hh_dir, f"batch={batch_id}"))
-
-    return (
-        event_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    cols = [group_col, key_col] + ([] if weight_col is None else [weight_col])
+    return state.maintain(
+        event_stream,
+        hh_dir,
+        checkpoint_dir,
+        lambda df: _mg_summaries_grouped(
+            df.select(*cols), group_col, key_col, int(capacity), weight_col
+        ),
     )
 
 
@@ -396,9 +329,8 @@ def read_heavy_hitters_grouped(
     :func:`read_heavy_hitters`, so the undercount invariant stays checkable
     at serve time group by group."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
-    parts = spark.read.parquet(hh_dir).drop("batch")
+    parts = state.read_parts(spark, hh_dir)
     bound = (
         parts.where(F.col("key").isNull())
         .groupBy("group")
@@ -427,49 +359,34 @@ def read_heavy_hitters_grouped(
 def compact_kmv_state(
     spark, kmv_dir: str, keys: tuple[str, ...] = ("event_type",), k: int = 1024
 ) -> int:
-    """Fold accumulated per-batch KMV partitions into one ``batch=-1``
-    generation (the :func:`compact_rollup` contract: atomic_publish swap,
-    hive ``batch`` layout kept so future micro-batches land beside it).
+    """Compact the KMV store. KMV union is itself a KMV state (k smallest of
+    the combined distinct hashes), so the compacted row per key IS the
+    sketch of everything the batches saw — serve answers are bit-identical
+    before and after (pinned in tests).
 
-    Why it matters at 100 TB: merge-on-read cost grows with batches x keys
+    Why it matters at 100 TB: merge-on-read cost grows with batches × keys
     rows; after a year of 5-minute triggers that is ~10^5 partitions per
-    key. KMV union is itself a KMV state (k smallest of the combined
-    distinct hashes), so the compacted row per key IS the sketch of
-    everything the batches saw — serve answers are bit-identical before and
-    after (pinned in tests). Run between availableNow drains; a checkpointed
-    stream never replays batches that predate the compaction."""
+    key."""
     from parqueryd_spark.operators.sketches import kmv_merge
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(kmv_dir).drop("batch")
-    merged = kmv_merge([parts], list(keys), k).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, kmv_dir, partition_by=["batch"])
-    return spark.read.parquet(kmv_dir).count()
+    return state.compact(spark, kmv_dir, lambda parts: kmv_merge([parts], list(keys), k))
 
 
 def compact_countmin_state(spark, cm_dir: str) -> int:
-    """Fold per-batch Count-Min cell partitions into one ``batch=-1``
-    generation. CM is linear (merge = cell sums), so the compacted
-    <= depth x width cells are bit-identical state — estimates unchanged."""
+    """Compact the Count-Min store. CM is linear (merge = cell sums), so the
+    compacted <= depth × width cells are bit-identical state — estimates
+    unchanged."""
     from parqueryd_spark.operators.sketches import count_min_merge
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(cm_dir).drop("batch")
-    merged = count_min_merge([parts]).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, cm_dir, partition_by=["batch"])
-    return spark.read.parquet(cm_dir).count()
+    return state.compact(spark, cm_dir, lambda parts: count_min_merge([parts]))
 
 
-def _compact_mg(spark, hh_dir: str, group_cols: list[str]) -> int:
-    """Shared Misra-Gries compaction: counter rows sum per (group?, key);
-    eviction errors sum per group (NULL-key marker rows). Summed-counter +
-    summed-error is itself a valid MG summary of everything the batches saw
-    (the merge the read path performs anyway), so serve answers — est
-    counts, undercount bounds, top-k order — are identical before and
-    after."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
-    parts = spark.read.parquet(hh_dir).drop("batch")
+def _merge_mg(parts: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Misra-Gries merge: counter rows sum per (group?, key); eviction errors
+    sum per group (NULL-key marker rows). Summed-counter + summed-error is
+    itself a valid MG summary of everything the batches saw (the merge the
+    read path performs anyway), so serve answers — est counts, undercount
+    bounds, top-k order — are identical before and after compaction."""
     counters = (
         parts.where(F.col("key").isNotNull())
         .groupBy(*group_cols, "key")
@@ -485,61 +402,45 @@ def _compact_mg(spark, hh_dir: str, group_cols: list[str]) -> int:
         )
         .select(*group_cols, "key", "cnt", "err")
     )
-    merged = counters.select(*group_cols, "key", "cnt", "err").unionByName(
-        markers
-    ).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, hh_dir, partition_by=["batch"])
-    return spark.read.parquet(hh_dir).count()
+    return counters.select(*group_cols, "key", "cnt", "err").unionByName(markers)
 
 
 def compact_histogram_state(
     spark, hist_dir: str, keys: tuple[str, ...] = ("event_type",)
 ) -> int:
-    """Fold accumulated per-batch histogram partitions into one ``batch=-1``
-    generation — the :func:`compact_kmv_state` contract applied to the
-    quantile state. Bin counts are LINEAR (merge = sum matching
-    (grain, keys, bin) rows — exactly the fold :func:`read_histogram_quantiles`
-    performs on every query), so the compacted state is bit-identical input
-    to the cumulative walk: quantile answers are unchanged while state
-    shrinks from batches x bins x grains x keys rows to bins x grains x keys.
-    Run between availableNow drains; future micro-batches land beside
-    ``batch=-1`` in the kept hive layout and merge in as before."""
+    """Compact the histogram store. Bin counts are LINEAR (merge = sum
+    matching (grain, keys, bin) rows — exactly the fold
+    :func:`read_histogram_quantiles` performs on every query), so the
+    compacted state is bit-identical input to the cumulative walk: quantile
+    answers are unchanged while state shrinks from batches × bins × grains ×
+    keys rows to bins × grains × keys."""
     from parqueryd_spark.operators.rollup import merge_histograms
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(hist_dir).drop("batch")
-    merged = merge_histograms(parts, keys=keys).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, hist_dir, partition_by=["batch"])
-    return spark.read.parquet(hist_dir).count()
+    return state.compact(spark, hist_dir, lambda parts: merge_histograms(parts, keys=keys))
 
 
 def compact_hll_state(
     spark, hll_dir: str, keys: tuple[str, ...] = ("event_type",)
 ) -> int:
-    """Fold accumulated per-batch HLL partitions into one ``batch=-1``
-    generation. HLL union is register-wise max (associative, commutative,
-    idempotent), so the compacted sketch per key IS the sketch of everything
-    the batches saw — :func:`read_hll_distinct` performs this exact union on
-    every read, compaction just persists it once. Estimates and n_rows are
-    unchanged; state shrinks from batches x keys sketches to keys."""
+    """Compact the HLL store. HLL union is register-wise max (associative,
+    commutative, idempotent), so the compacted sketch per key IS the sketch
+    of everything the batches saw — :func:`read_hll_distinct` performs this
+    exact union on every read. Estimates and n_rows are unchanged; state
+    shrinks from batches × keys sketches to keys."""
     from parqueryd_spark.operators.sketches import hll_rollup_merge
-    from parqueryd_spark.sources.sinks import atomic_publish
 
-    parts = spark.read.parquet(hll_dir).drop("batch")
-    merged = hll_rollup_merge([parts], list(keys)).withColumn("batch", F.lit(-1))
-    atomic_publish(merged, hll_dir, partition_by=["batch"])
-    return spark.read.parquet(hll_dir).count()
+    return state.compact(spark, hll_dir, lambda parts: hll_rollup_merge([parts], list(keys)))
 
 
 def compact_heavy_hitters_state(spark, hh_dir: str) -> int:
-    """Fold per-batch global Misra-Gries partitions (rows (key, cnt, err),
-    one NULL-key error marker per partition) into one ``batch=-1``
-    generation — state shrinks from batches x partitions x capacity rows to
-    distinct-keys + 1, bounds and answers unchanged."""
-    return _compact_mg(spark, hh_dir, [])
+    """Compact the global Misra-Gries store (rows (key, cnt, err), one
+    NULL-key error marker per partition) by :func:`_merge_mg` — state
+    shrinks from batches × partitions × capacity rows to distinct-keys + 1,
+    bounds and answers unchanged."""
+    return state.compact(spark, hh_dir, lambda parts: _merge_mg(parts, []))
 
 
 def compact_heavy_hitters_grouped_state(spark, hh_dir: str) -> int:
     """Grouped twin of :func:`compact_heavy_hitters_state`: counters sum per
     (group, key), eviction errors per group — one marker row per group."""
-    return _compact_mg(spark, hh_dir, ["group"])
+    return state.compact(spark, hh_dir, lambda parts: _merge_mg(parts, ["group"]))

@@ -3,22 +3,16 @@ of documents lands its postings and stats partial in their own ``batch=<id>``
 partitions of a published text index (operators/text.py:text_index_publish),
 so the BM25 serve path (``bm25_from_index``) sees new documents one trigger
 after they arrive — the near-real-time-search face of the batch index
-lifecycle, structurally the same foreachBatch + idempotent-partition pattern
-as streaming/dedup and streaming/rollup.
-
-Replay safety: foreachBatch is at-least-once, but a replayed batch id
-OVERWRITES its own ``batch=<id>`` partitions (postings and stats alike), so
-totals never double-count. Corpus stats are mergeable partials summed at
-serve time, which is what makes the maintenance write-only — no
-read-modify-rewrite of a stats row, hence nothing to corrupt mid-crash.
+lifecycle. Postings and stats are two stores under the
+:mod:`parqueryd_spark.streaming.state` contract. Corpus stats are mergeable
+partials summed at serve time, which is what makes the maintenance
+write-only — no read-modify-rewrite of a stats row, hence nothing to corrupt
+mid-crash.
 
 Batch-id spaces are disjoint by construction: the stream owns the
 NONNEGATIVE ids its checkpoint assigns, manual ``text_index_append`` counts
 NEGATIVE generations down from the published ``batch=-1`` — so appends and
-stream micro-batches can never overwrite each other on the same index. Run
-``compact_text_index`` only between availableNow drains (it folds every
-generation into ``batch=-1``; a replay of a pre-compaction micro-batch would
-re-add its docs).
+stream micro-batches can never overwrite each other on the same index.
 """
 
 from __future__ import annotations
@@ -26,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parqueryd_spark.operators.text import _index_postings, _index_stats_partial
+from parqueryd_spark.operators.text import _index_land
+from parqueryd_spark.streaming import state
 
 
 def stream_index_text(
@@ -44,54 +39,37 @@ def stream_index_text(
     Precondition (as for text_index_append): incoming doc ids are new to the
     index — dedup upstream (streaming/dedup.stream_near_dedup composes: its
     survivors are exactly the docs worth indexing)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = index_dir.rstrip("/")
-        n_buckets = spark.read.parquet(root + "/_stats").head()["n_buckets"]
-        _index_postings(batch_df, id_col, text_col, n_buckets).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(root + f"/postings/batch={batch_id}")
-        _index_stats_partial(batch_df, text_col, n_buckets).write.mode(
-            "overwrite"
-        ).parquet(root + f"/_stats/batch={batch_id}")
-
-    return (
-        doc_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return state.drain(
+        doc_stream,
+        checkpoint_dir,
+        lambda df, batch_id: _index_land(index_dir, df, id_col, text_col, batch_id),
     )
 
 
 def compact_text_index(spark, index_dir: str, target_partitions: int = 8) -> int:
-    """Fold the accumulated ``batch=<id>`` generations into one ``batch=-1``
-    generation (postings re-bucketed, stats partials summed to a single row).
-    Long-running streams add a partition directory per micro-batch; left
-    alone, serve-path planning degrades into file listing. Goes through
-    ``atomic_publish`` (readers flip atomically, rollback on failure). Run
-    between availableNow drains. Returns the compacted posting count."""
-    from parqueryd_spark.sources.sinks import atomic_publish
-
+    """Compact both stores: postings are a disjoint union (doc ids are new to
+    the index), re-bucketed into ``target_partitions`` files per bucket;
+    stats partials are sums, folded to a single row. Returns the compacted
+    posting count."""
     root = index_dir.rstrip("/")
     n_buckets = spark.read.parquet(root + "/_stats").head()["n_buckets"]
-    postings = (
-        spark.read.parquet(root + "/postings")
-        .select("token", "doc", "tf", "dl", "bucket")
-        .withColumn("batch", F.lit(-1))
+    n = state.compact(
+        spark,
+        root + "/postings",
         # without the repartition the rewrite keeps the accumulated
         # per-micro-batch file spray — the exact thing compaction exists to fix
-        .repartition(target_partitions, "bucket")
+        lambda parts: parts.select("token", "doc", "tf", "dl", "bucket").repartition(
+            target_partitions, "bucket"
+        ),
+        partition_by=["bucket"],
     )
-    atomic_publish(postings, root + "/postings", partition_by=["batch", "bucket"])
-    stats = (
-        spark.read.parquet(root + "/_stats")
-        .agg(
+    state.compact(
+        spark,
+        root + "/_stats",
+        lambda parts: parts.agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
             F.lit(n_buckets).alias("n_buckets"),
-        )
-        .withColumn("batch", F.lit(-1))
+        ),
     )
-    atomic_publish(stats, root + "/_stats", partition_by=["batch"])
-    return spark.read.parquet(root + "/postings").count()
+    return n

@@ -17,10 +17,14 @@ if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
 TRIALS = 5
+USAGE = "usage: python tools/time_rows.py <row> [row ...]   (env: SPARK_GRAFT_SF_DIR)"
 
 
 def main() -> None:
     names = sys.argv[1:]
+    if not names:
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from parqueryd_spark import queries as Q
     from parqueryd_spark.session import get_spark
