@@ -207,53 +207,45 @@ def lm_publish(
     batch: str = "base",
     n: int = 2,
 ) -> None:
-    """Persist the LM as a living dataset — the same publish/load/append
-    posture as the ANN indexes (operators/squant.py:sq_publish): partial
-    bigram counts land under ``<lm_dir>/counts/batch=<batch>`` (idempotent
-    per-batch overwrite) and the smoothing constant under ``<lm_dir>/meta``.
-    The served model is merge-on-read over ALL batches (linearity: ≡
-    one-shot training on the concatenated corpus, bit-exact), so growing the
-    training corpus is ``lm_append`` at O(increment) cost — the standing
-    corpus is never re-scanned."""
-    spark.createDataFrame([(float(k), int(n))], "k double, n int").write.mode(
-        "overwrite"
-    ).parquet(f"{lm_dir}/meta")
-    (
-        ngram_counts(docs, text_col, n)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        # dynamic: re-publishing a batch overwrites ONLY that batch partition
-        # — a static overwrite would wipe every previously appended batch and
-        # silently destroy the accumulated model
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{lm_dir}/counts")
-    )
+    """Persist the LM as a living dataset — the count store
+    :mod:`parqueryd_spark.streaming.lm` maintains, so a published LM and a
+    stream-maintained one are the same layout: partial n-gram counts land
+    under ``<lm_dir>/batch=<batch>`` (idempotent per-batch overwrite, other
+    batches untouched) and (k, n) is the store's ``_meta``, claimed for its
+    lifetime — republishing at a different (k, n) raises instead of leaving
+    older batches at the old order. The served model is merge-on-read over
+    ALL batches (linearity: ≡ one-shot training on the concatenated corpus,
+    bit-exact), so growing the training corpus is ``lm_append`` at
+    O(increment) cost — the standing corpus is never re-scanned — and
+    ``compact_lm_state`` folds the batches without changing a score."""
+    from parqueryd_spark.streaming import state
+    from parqueryd_spark.streaming.lm import claim_lm_meta
+
+    claim_lm_meta(spark, lm_dir, k, n)
+    state.land(ngram_counts(docs, text_col, n), lm_dir, batch)
 
 
 def lm_append(
     spark, lm_dir: str, new_docs: DataFrame, batch: str, text_col: str = "text"
 ) -> None:
-    """Incremental training: count ONLY the increment at the index's OWN
-    persisted order (meta-driven, the sq_append contract), landing it as its
+    """Incremental training: count ONLY the increment at the store's OWN
+    recorded order (meta-driven, the sq_append contract), landing it as its
     own ``batch=<batch>`` partition (replays overwrite themselves)."""
-    meta = spark.read.parquet(f"{lm_dir}/meta").collect()[0]
-    (
-        ngram_counts(new_docs, text_col, int(meta["n"]))
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{lm_dir}/counts")
-    )
+    from parqueryd_spark.streaming import state
+
+    meta = state.read_meta(spark, lm_dir)
+    if meta is None:
+        raise FileNotFoundError(f"no published LM at {lm_dir} (missing _meta); lm_publish first")
+    state.land(ngram_counts(new_docs, text_col, int(meta[1])), lm_dir, batch)
 
 
 def lm_load(spark, lm_dir: str) -> NgramLM:
-    """The served LM: merge-on-read of every published count batch (the
+    """The served LM: merge-on-read of every published count batch at the
+    recorded (k, n) — :func:`parqueryd_spark.streaming.lm.read_lm` (the
     1-row meta collect is the only driver-side read)."""
-    meta = spark.read.parquet(f"{lm_dir}/meta").collect()[0]
-    parts = spark.read.parquet(f"{lm_dir}/counts").drop("batch")
-    return lm_merge([parts], float(meta["k"]), int(meta["n"]))
+    from parqueryd_spark.streaming.lm import read_lm
+
+    return read_lm(spark, lm_dir)
 
 
 def _suffix(col, start: int, length: int):

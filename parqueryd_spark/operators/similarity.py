@@ -59,8 +59,6 @@ def brute_force_topk(
     tie-broken by neighbor id for determinism. Returns
     (query_id, neighbor_id, cosine_sim, rank).
     """
-    from pyspark.sql import Window as W
-
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
@@ -71,11 +69,106 @@ def brute_force_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
+    return _top_k(scored, "cosine_sim", k).select("query_id", "neighbor_id", "cosine_sim", "rank")
+
+
+def _top_k(scored: DataFrame, score: str, k: int, ascending: bool = False) -> DataFrame:
+    """Each query's ``k`` best rows by ``score`` (descending unless
+    ``ascending``, ties to the lower neighbor id), numbered in ``rank``."""
+    from pyspark.sql import Window as W
+
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = W.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _probe(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest centroids by cosine (ties to the lower
+    centroid id) as (query_id, qv, centroid_id, cv, ...) rows — the coarse
+    half of every IVF search. The centroid list is broadcast (metadata
+    scale) and the output is |queries| x nprobe rows; each codec projects
+    the query-side terms its candidate score needs."""
+    from pyspark.sql import Window as W
+
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
+    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
+    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+        q.crossJoin(F.broadcast(cen))
+        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+    )
+
+
+def _rerank(
+    shortlist: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact re-rank of an approximate (query_id, neighbor_id) shortlist
+    against full-precision ``corpus`` vectors — the refine step every codec
+    shares. Returns (query_id, neighbor_id, cosine_sim, rank) with the
+    cosine rounded to 6 dp.
+
+    The shortlist and the query vectors are fused into ONE pre-joined
+    broadcast frame, so the corpus-sized side streams past a single
+    broadcast exchange and probe and is never shuffled (estimate-driven
+    planning at toy scale would broadcast the corpus instead —
+    scale-backwards). The broadcast is bounded by ``refine·k·|queries|``
+    rows, each carrying one ``dim``-double query vector; chunk query
+    batches whose bound outgrows the broadcast threshold."""
+    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
+    plan = shortlist.select("query_id", "neighbor_id").join(q, "query_id")
+    rer = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
+        .join(F.broadcast(plan), "neighbor_id")
+        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
+    )
+    return _top_k(rer, "cosine_sim", k).select("query_id", "neighbor_id", "cosine_sim", "rank")
+
+
+def _resolve_centroids(
+    corpus: DataFrame,
+    centroids: DataFrame | str,
+    n_centroids: int | None,
+    id_col: str,
+    vec_col: str,
+    seed: int = 42,
+) -> DataFrame:
+    """The coarse quantizer every IVF index is built on. A prebuilt
+    (centroid_id, vec_col) DataFrame passes through; a mode string
+    (``n_centroids`` required) fits one: ``"kmeans"`` is seeded MLlib KMeans
+    under cosine distance (:func:`kmeans_centroids` — the production choice:
+    on clustered corpora fitted centroids track the real cluster structure,
+    pytest-pinned in tests/test_ivf_lifecycle.py); ``"first_k"`` takes the
+    ``n_centroids`` lowest-id vectors, centroid_id = that id as int
+    (deterministic and fit-free — the oracle-stable default)."""
+    if not isinstance(centroids, str):
+        return centroids
+    if n_centroids is None:
+        raise ValueError("centroids mode string requires n_centroids")
+    if centroids == "kmeans":
+        return kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
+    if centroids == "first_k":
+        return _first_k_centroids(corpus, n_centroids, id_col, vec_col).withColumn(
+            "centroid_id", F.col("centroid_id").cast("int")
+        )
+    raise ValueError(f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}")
+
+
+def _appended_counts(spark, index_dir: str, batch: str) -> DataFrame:
+    """Per-centroid row counts of one landed ``batch`` of an index."""
+    return (
+        spark.read.parquet(index_dir)
+        .filter(F.col("batch") == batch)
+        .groupBy("centroid_id")
+        .agg(F.count("*").alias("n_appended"))
     )
 
 
@@ -176,17 +269,8 @@ def ivf_search(
     query (broadcast — centroid lists are metadata-scale), scan only the
     ``nprobe`` best buckets, window-rank the verified cosines. Returns
     (query_id, neighbor_id, cosine_sim, rank)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
-    w_probe = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
+    probes = _probe(queries, centroids, nprobe, id_col, vec_col).select(
+        "query_id", "qv", "centroid_id"
     )
     scored = (
         index.select(
@@ -198,12 +282,7 @@ def ivf_search(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _top_k(scored, "cosine_sim", k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def ivf_topk(
@@ -223,16 +302,7 @@ def ivf_topk(
     fit-free); ``"kmeans"`` fits MLlib KMeans (better bucket balance =>
     better recall at the same nprobe).
     Returns (query_id, neighbor_id, cosine_sim, rank)."""
-    if centroid_mode not in ("first_k", "kmeans"):
-        raise ValueError(f"centroid_mode must be 'first_k' or 'kmeans', got {centroid_mode!r}")
-    if centroid_mode == "kmeans":
-        centroids = kmeans_centroids(corpus, n_centroids, vec_col=vec_col)
-    else:
-        centroids = (
-            corpus.orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("centroid_id"), F.col(vec_col))
-        )
+    centroids = _resolve_centroids(corpus, centroid_mode, n_centroids, id_col, vec_col)
     index = ivf_index(corpus, centroids, id_col, vec_col)
     return ivf_search(index, centroids, queries, nprobe, id_col, vec_col, k)
 
@@ -332,48 +402,34 @@ def ivf_publish(
     n_centroids: int | None = None,
     seed: int = 42,
 ) -> None:
-    """Persist a self-contained IVF index: centroids at
-    ``<index_dir>/centroids`` and assigned vectors at ``<index_dir>/vectors``
-    partitioned by ``(batch, centroid_id)`` — the layout that makes the index
-    a living dataset rather than a one-shot artifact. Searches prune on the
-    second-level ``centroid_id`` directories regardless of batch;
-    ``ivf_append`` adds later corpus increments as new ``batch=`` partitions
-    (idempotently replayable — re-writing a batch overwrites exactly its own
-    partition); the centroids file is the metadata the appends quantize
-    against.
+    """Persist a self-contained IVF index as ONE dataset at ``index_dir``:
+    the assigned vectors partitioned by ``(batch, centroid_id)``, with the
+    centroids as its ``_centroids`` sidecar — the layout that makes the
+    index a living dataset rather than a one-shot artifact. Searches prune
+    on the second-level ``centroid_id`` directories regardless of batch;
+    ``ivf_append`` adds later corpus increments as new ``batch=``
+    partitions (idempotently replayable — re-writing a batch overwrites
+    exactly its own partition); the centroids are the metadata the appends
+    quantize against.
 
-    ``centroids`` is either a prebuilt centroids DataFrame
-    (``centroid_id, vec_col``) or a fit mode string (``n_centroids``
-    required): ``"kmeans"`` fits seeded MLlib KMeans with cosine distance
-    (:func:`kmeans_centroids` — the production coarse quantizer: on
-    clustered corpora fitted centroids track the real cluster structure, so
-    equal-``nprobe`` searches probe the buckets the true neighbors actually
-    landed in; recall dominance over first-K is pytest-pinned on a clustered
-    synthetic corpus); ``"first_k"`` takes the first ``n_centroids`` corpus
-    vectors by id (deterministic and fit-free — the oracle-stable default
-    the registry rows use)."""
-    if isinstance(centroids, str):
-        if n_centroids is None:
-            raise ValueError("centroids mode string requires n_centroids")
-        if centroids == "kmeans":
-            centroids = kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
-        elif centroids == "first_k":
-            centroids = (
-                corpus.orderBy(F.col(id_col).asc())
-                .limit(n_centroids)
-                .select(F.col(id_col).cast("int").alias("centroid_id"), F.col(vec_col))
-            )
-        else:
-            raise ValueError(
-                f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
-            )
-    centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    (
-        ivf_index(corpus, centroids, id_col, vec_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/vectors")
+    The whole generation — vectors and sidecar — goes through
+    :func:`parqueryd_spark.sources.sinks.atomic_publish`: readers see the
+    previous index or the new one, never new centroids beside old vectors,
+    and a failed republish leaves the previous index (appended batches
+    included) serving. A successful republish replaces the index.
+
+    ``centroids`` is a prebuilt centroids DataFrame (``centroid_id,
+    vec_col``) or a fit mode string with ``n_centroids``: ``"kmeans"`` or
+    ``"first_k"`` (the oracle-stable default the registry rows use) — see
+    :func:`_resolve_centroids`."""
+    from parqueryd_spark.sources.sinks import atomic_publish
+
+    centroids = _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed)
+    atomic_publish(
+        ivf_index(corpus, centroids, id_col, vec_col).withColumn("batch", F.lit(batch)),
+        index_dir,
+        partition_by=["batch", "centroid_id"],
+        sidecars=[(centroids, "_centroids")],
     )
 
 
@@ -381,10 +437,7 @@ def ivf_load(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
     """(vectors, centroids) of a published index. The vectors frame is
     search-ready for :func:`ivf_search` — partition pruning on centroid_id
     still applies through the extra batch directory level."""
-    return (
-        spark.read.parquet(f"{index_dir}/vectors"),
-        spark.read.parquet(f"{index_dir}/centroids"),
-    )
+    return spark.read.parquet(index_dir), spark.read.parquet(f"{index_dir}/_centroids")
 
 
 def ivf_append(
@@ -396,36 +449,31 @@ def ivf_append(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Incremental IVF maintenance: quantize ``new_vectors`` against the
-    index's OWN persisted centroids and add them as the ``batch=<batch>``
-    partition — cost is one broadcast-assign pass over the increment, never a
-    re-scan or re-cluster of the existing corpus (the daily-growth shape, the
-    vector twin of dedup.incremental_minhash_pairs). Returns per-centroid
-    counts of the appended batch.
+    index's OWN persisted centroids and land them as the ``batch=<batch>``
+    partition (:func:`parqueryd_spark.streaming.state.land`) — cost is one
+    broadcast-assign pass over the increment, never a re-scan or re-cluster
+    of the existing corpus (the daily-growth shape, the vector twin of
+    dedup.incremental_minhash_pairs). Returns per-centroid counts of the
+    appended batch.
 
-    Re-running the same batch id overwrites exactly that partition (dynamic
-    partition overwrite), so a failed-and-replayed ingest cannot double-count.
+    Re-running the same batch id overwrites exactly that partition, so a
+    failed-and-replayed ingest cannot double-count.
 
     Centroids are frozen at publish time; appended vectors that sit far from
     every centroid degrade recall silently. Watch :func:`ivf_bucket_stats` —
     when new batches skew heavily into few buckets (or grow a bucket far past
     the mean), rebuild with fresh ``kmeans_centroids`` and republish.
     """
-    centroids = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = ivf_index(new_vectors, centroids, id_col, vec_col).withColumn(
-        "batch", F.lit(batch)
+    from parqueryd_spark.streaming import state
+
+    centroids = spark.read.parquet(f"{index_dir}/_centroids")
+    state.land(
+        ivf_index(new_vectors, centroids, id_col, vec_col),
+        index_dir,
+        batch,
+        partition_by=["centroid_id"],
     )
-    (
-        assigned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/vectors")
-    )
-    return (
-        spark.read.parquet(f"{index_dir}/vectors")
-        .filter(F.col("batch") == batch)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n_appended"))
-    )
+    return _appended_counts(spark, index_dir, batch)
 
 
 def ivf_bucket_stats(spark, index_dir: str) -> DataFrame:
@@ -433,7 +481,7 @@ def ivf_bucket_stats(spark, index_dir: str) -> DataFrame:
     trigger metric (metadata-scale output: n_centroids x n_batches rows,
     computed from a column-pruned scan of the two partition columns)."""
     return (
-        spark.read.parquet(f"{index_dir}/vectors")
+        spark.read.parquet(index_dir)
         .groupBy("centroid_id", "batch")
         .agg(F.count("*").alias("n_vectors"))
     )

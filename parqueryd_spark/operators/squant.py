@@ -38,7 +38,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parqueryd_spark.operators.similarity import as_double, cosine, norm
+from parqueryd_spark.operators.similarity import (
+    _probe,
+    _rerank,
+    _resolve_centroids,
+    _top_k,
+    as_double,
+    ivf_assign,
+    norm,
+)
 from parqueryd_spark.operators.util import spread_partitions
 
 
@@ -127,6 +135,40 @@ def _lit_arr(xs: list[float]):
     return F.array(*[F.lit(float(x)) for x in xs])
 
 
+def _query_terms(qv, lo: list[float], step: list[float]) -> list:
+    """The per-query half of the linear-decode identity: ``q_const`` =
+    Σ lo_i·q_i and the weight vector ``w`` = step·q."""
+    return [
+        F.aggregate(
+            F.zip_with(_lit_arr(lo), qv, lambda l, x: l * x),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("q_const"),
+        F.zip_with(_lit_arr(step), qv, lambda s, x: s * x).alias("w"),
+    ]
+
+
+def _score():
+    """A candidate's approximate similarity: ``q_const + Σ code_i·w_i``."""
+    return F.col("q_const") + F.aggregate(
+        F.zip_with("codes", "w", lambda ci, wi: ci.cast("double") * wi),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _grid_frame(spark, lo: list[float], step: list[float]) -> DataFrame:
+    """The (i, lo, step) rows a published index carries as its ``_grid``."""
+    rows = [(i, float(l), float(s)) for i, (l, s) in enumerate(zip(lo, step))]
+    return spark.createDataFrame(rows, "i int, lo double, step double")
+
+
+def _read_grid(spark, index_dir: str) -> tuple[list[float], list[float]]:
+    """(lo, step) from a published index's ``_grid`` (dim rows)."""
+    rows = sorted(spark.read.parquet(f"{index_dir}/_grid").collect(), key=lambda r: r["i"])
+    return [float(r["lo"]) for r in rows], [float(r["step"]) for r in rows]
+
+
 def sq_encode(
     corpus: DataFrame,
     lo: list[float],
@@ -165,32 +207,14 @@ def sq_search(
     ``const + Σ code_i·w_i`` (the linear-decode identity above) ranks
     candidates without touching a float vector. Deterministic neighbor-id
     tie-break. Returns (query_id, neighbor_id, approx_sim, rank)."""
-    from pyspark.sql import Window as W
-
     qv = _normalized(F.col(vec_col), normalize)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.aggregate(
-            F.zip_with(_lit_arr(lo), qv, lambda l, x: l * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("q_const"),
-        F.zip_with(_lit_arr(step), qv, lambda s, x: s * x).alias("w"),
-    )
+    q = queries.select(F.col(id_col).alias("query_id"), *_query_terms(qv, lo, step))
     c = spread_partitions(codes.select(F.col(id_col).alias("neighbor_id"), "codes"))
-    score = F.col("q_const") + F.aggregate(
-        F.zip_with("codes", "w", lambda ci, wi: ci.cast("double") * wi),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).withColumn(
-        "approx_sim", score
+        "approx_sim", _score()
     )
-    w = W.partitionBy("query_id").orderBy(F.col("approx_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("approx_sim", 6).alias("approx_sim"), "rank")
+    return _top_k(scored, "approx_sim", k).select(
+        "query_id", "neighbor_id", F.round("approx_sim", 6).alias("approx_sim"), "rank"
     )
 
 
@@ -210,41 +234,14 @@ def sq_topk(
     both paths). Same return shape as ``pq_topk``:
     (query_id, neighbor_id, cosine_sim, rank) under refine,
     (query_id, neighbor_id, approx_sim, rank) without."""
-    from pyspark.sql import Window as W
-
     lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
     codes = sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
     if refine <= 0:
         return sq_search(codes, queries, lo, step, id_col=id_col, vec_col=vec_col, k=k)
     shortlist = sq_search(
         codes, queries, lo, step, id_col=id_col, vec_col=vec_col, k=refine * k
-    ).select("query_id", "neighbor_id")
-    # broadcast the BOUNDED refine*k*|queries| shortlist; the sf-growing
-    # corpus streams un-shuffled (guide §3.1 — estimate-driven planning at
-    # toy SF would pick the corpus as build side, scale-backwards).
-    # r16 (VERDICT r15 item #4): shortlist and query vectors are FUSED into
-    # one pre-joined broadcast frame, so the corpus-side row pays ONE
-    # broadcast exchange + ONE probe instead of two — the refine side's
-    # extra exchange was the one real toy-scale regression of r15. The fused
-    # payload stays bounded: refine*k rows per query, each carrying the
-    # query vector.
-    qside = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    plan = shortlist.join(qside, "query_id")
-    rer = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
-        )
-        .join(F.broadcast(plan), "neighbor_id")
-        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rerank(shortlist, queries, corpus, k, id_col, vec_col)
 
 
 def sq_publish(
@@ -256,33 +253,30 @@ def sq_publish(
     vec_col: str = "embedding",
     batch: str = "base",
 ) -> None:
-    """Persist a self-contained SQ index: the (lo, step) grid at
-    ``<index_dir>/grid`` and the int8-range codes at ``<index_dir>/codes``
-    partitioned by ``batch`` — the same living-dataset posture as
+    """Persist a self-contained SQ index as ONE dataset at ``index_dir``:
+    the int8-range codes partitioned by ``batch``, with the (lo, step) grid
+    as its ``_grid`` sidecar, published all-or-nothing through
+    ``atomic_publish`` — the same living-dataset posture as
     ``ivf_publish``/``ivfpq_publish``. Appends quantize against the
     PERSISTED grid (saturating clamp keeps out-of-grid increments sound),
     and re-writing a batch overwrites exactly its own partition."""
-    grid_rows = [(i, float(l), float(s)) for i, (l, s) in enumerate(zip(*sq_train(corpus, dim=dim, vec_col=vec_col)))]
-    spark.createDataFrame(grid_rows, "i int, lo double, step double").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/grid")
-    lo = [r[1] for r in grid_rows]
-    step = [r[2] for r in grid_rows]
-    (
-        sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/codes")
+    from parqueryd_spark.sources.sinks import atomic_publish
+
+    lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
+    atomic_publish(
+        sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col).withColumn(
+            "batch", F.lit(batch)
+        ),
+        index_dir,
+        partition_by=["batch"],
+        sidecars=[(_grid_frame(spark, lo, step), "_grid")],
     )
 
 
 def sq_load(spark, index_dir: str) -> tuple[DataFrame, list[float], list[float]]:
     """(codes, lo, step) of a published SQ index — the grid collect is
     metadata scale (dim rows)."""
-    rows = sorted(spark.read.parquet(f"{index_dir}/grid").collect(), key=lambda r: r["i"])
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    return codes, [float(r["lo"]) for r in rows], [float(r["step"]) for r in rows]
+    return (spark.read.parquet(index_dir), *_read_grid(spark, index_dir))
 
 
 def sq_append(
@@ -296,39 +290,14 @@ def sq_append(
     """Incremental SQ maintenance: encode the increment against the index's
     OWN persisted grid — one map pass over the new rows, never a re-scan of
     the standing corpus — and land it as the ``batch=<batch>`` partition
-    (dynamic partition overwrite: replays can't double-count). Vectors
-    outside the trained grid saturate to code 0/255 (bounded, sound);
-    if increments drift far from the base distribution, retrain and
-    republish."""
-    _, lo, step = sq_load(spark, index_dir)
-    (
-        sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/codes")
-    )
+    (:func:`parqueryd_spark.streaming.state.land`: replays overwrite
+    themselves, so they can't double-count). Vectors outside the trained
+    grid saturate to code 0/255 (bounded, sound); if increments drift far
+    from the base distribution, retrain and republish."""
+    from parqueryd_spark.streaming import state
 
-
-def _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed):
-    from parqueryd_spark.operators.similarity import kmeans_centroids
-
-    if not isinstance(centroids, str):
-        return centroids
-    if n_centroids is None:
-        raise ValueError("centroids mode string requires n_centroids")
-    if centroids == "kmeans":
-        return kmeans_centroids(corpus, n_centroids, vec_col=vec_col, seed=seed)
-    if centroids == "first_k":
-        return (
-            corpus.orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(F.col(id_col).cast("int").alias("centroid_id"), F.col(vec_col))
-        )
-    raise ValueError(
-        f"centroids must be a DataFrame, 'kmeans', or 'first_k'; got {centroids!r}"
-    )
+    lo, step = _read_grid(spark, index_dir)
+    state.land(sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col), index_dir, batch)
 
 
 def ivfsq_publish(
@@ -349,38 +318,33 @@ def ivfsq_publish(
     ``(batch, centroid_id)`` layout, same as the IVF/IVF-PQ indexes) and SQ8
     cuts HOW MUCH each read row costs (4-byte-per-dim floats → 1-byte codes
     scored by a JVM fold — no Python on the codes stream, SQ's edge over
-    PQ's ADC tables). Layout: ``centroids``, ``grid`` (global per-dimension
-    lo/step — the FAISS "IVF,SQ8" formulation; bucket-local grids would
-    tighten steps but break the one-broadcast-weight-per-query identity),
-    and ``codes`` partitioned by ``(batch, centroid_id)``."""
-    cents = _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed)
-    cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
-    grid_rows = [(i, float(l), float(s)) for i, (l, s) in enumerate(zip(lo, step))]
-    spark.createDataFrame(grid_rows, "i int, lo double, step double").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/grid")
-    from parqueryd_spark.operators.similarity import ivf_assign
+    PQ's ADC tables). Layout: ONE dataset at ``index_dir`` — the codes
+    partitioned by ``(batch, centroid_id)`` — whose ``_centroids`` and
+    ``_grid`` sidecars (global per-dimension lo/step — the FAISS "IVF,SQ8"
+    formulation; bucket-local grids would tighten steps but break the
+    one-broadcast-weight-per-query identity) land in the same
+    ``atomic_publish`` generation as the codes."""
+    from parqueryd_spark.sources.sinks import atomic_publish
 
+    cents = _resolve_centroids(corpus, centroids, n_centroids, id_col, vec_col, seed)
+    lo, step = sq_train(corpus, dim=dim, vec_col=vec_col)
     assigned = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
-    (
+    atomic_publish(
         sq_encode(corpus, lo, step, id_col=id_col, vec_col=vec_col)
         .join(assigned, id_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/codes")
+        .withColumn("batch", F.lit(batch)),
+        index_dir,
+        partition_by=["batch", "centroid_id"],
+        sidecars=[(cents, "_centroids"), (_grid_frame(spark, lo, step), "_grid")],
     )
 
 
 def ivfsq_load(spark, index_dir: str):
     """(codes, centroids, lo, step) of a published IVF-SQ index."""
-    rows = sorted(spark.read.parquet(f"{index_dir}/grid").collect(), key=lambda r: r["i"])
     return (
-        spark.read.parquet(f"{index_dir}/codes"),
-        spark.read.parquet(f"{index_dir}/centroids"),
-        [float(r["lo"]) for r in rows],
-        [float(r["step"]) for r in rows],
+        spark.read.parquet(index_dir),
+        spark.read.parquet(f"{index_dir}/_centroids"),
+        *_read_grid(spark, index_dir),
     )
 
 
@@ -403,66 +367,20 @@ def ivfsq_search(
     via DPP — shortlist ``refine*k``, exact cosine re-rank against
     full-precision ``corpus`` vectors. ``refine=0``/``corpus=None`` returns
     the raw quantized ranking (query_id, neighbor_id, approx_sim, rank)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    cen = centroids.select("centroid_id", as_double(F.col(vec_col)).alias("cv"))
-    w_probe = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-    nqv = _normalized(F.col("qv"), True)
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id",
-            "centroid_id",
-            F.aggregate(
-                F.zip_with(_lit_arr(lo), nqv, lambda l, x: l * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("q_const"),
-            F.zip_with(_lit_arr(step), nqv, lambda s, x: s * x).alias("w"),
-        )
-    )
-    score = F.col("q_const") + F.aggregate(
-        F.zip_with("codes", "w", lambda ci, wi: ci.cast("double") * wi),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    probes = _probe(queries, centroids, nprobe, id_col, vec_col).select(
+        "query_id", "centroid_id", *_query_terms(_normalized(F.col("qv"), True), lo, step)
     )
     scored = (
         codes.select(F.col(id_col).alias("neighbor_id"), "codes", "centroid_id")
         .join(F.broadcast(probes), "centroid_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("approx_sim", score)
+        .withColumn("approx_sim", _score())
     )
-    shortlist_k = k if (refine <= 0 or corpus is None) else refine * k
-    w = W.partitionBy("query_id").orderBy(F.col("approx_sim").desc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist_k)
-        .select("query_id", "neighbor_id", F.round("approx_sim", 6).alias("approx_sim"), "rank")
+    refined = refine > 0 and corpus is not None
+    shortlist = _top_k(scored, "approx_sim", refine * k if refined else k).select(
+        "query_id", "neighbor_id", F.round("approx_sim", 6).alias("approx_sim"), "rank"
     )
-    if refine <= 0 or corpus is None:
-        return shortlist
-    # bounded shortlist broadcast, corpus streamed — same rationale as
-    # sq_topk above (guide §3.1); shortlist and query vectors fused into ONE
-    # broadcast frame (r16, VERDICT r15 item #4) so the corpus pays a single
-    # exchange + probe instead of two.
-    plan = shortlist.select("query_id", "neighbor_id").join(q, "query_id")
-    rer = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv")
-        )
-        .join(F.broadcast(plan), "neighbor_id")
-        .withColumn("cosine_sim", F.round(cosine("qv", "nv"), 6))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rerank(shortlist, queries, corpus, k, id_col, vec_col) if refined else shortlist
 
 
 def ivfsq_append(
@@ -475,20 +393,18 @@ def ivfsq_append(
 ) -> None:
     """Incremental IVF-SQ maintenance: assign against the index's persisted
     centroids and encode against its persisted grid — one broadcast-assign +
-    one map-encode pass over the increment; dynamic partition overwrite
-    keeps replays idempotent. Both quantizers are frozen at publish; on
-    distribution drift (bucket skew, saturating codes) rebuild and
-    republish."""
-    from parqueryd_spark.operators.similarity import ivf_assign
+    one map-encode pass over the increment, landed with
+    :func:`parqueryd_spark.streaming.state.land` so replays stay idempotent.
+    Both quantizers are frozen at publish; on distribution drift (bucket
+    skew, saturating codes) rebuild and republish."""
+    from parqueryd_spark.streaming import state
 
-    codes, cents, lo, step = ivfsq_load(spark, index_dir)
+    cents = spark.read.parquet(f"{index_dir}/_centroids")
+    lo, step = _read_grid(spark, index_dir)
     assigned = ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
-    (
-        sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col)
-        .join(assigned, id_col)
-        .withColumn("batch", F.lit(batch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "centroid_id")
-        .parquet(f"{index_dir}/codes")
+    state.land(
+        sq_encode(new_vectors, lo, step, id_col=id_col, vec_col=vec_col).join(assigned, id_col),
+        index_dir,
+        batch,
+        partition_by=["centroid_id"],
     )

@@ -150,9 +150,10 @@ def served_ivf_index(
     spark: SparkSession, sf_dir: str, n_centroids: int = 16
 ) -> tuple[DataFrame, DataFrame]:
     """(vectors, centroids) for the embeddings table, served from a PUBLISHED
-    IVF index (operators/similarity.py:ivf_publish layout — centroids file +
-    vectors partitioned by (batch, centroid_id)) — built ONCE per
-    (sf_dir, n_centroids) per process into a session-scoped temp dir, then
+    IVF index (operators/similarity.py:ivf_publish layout — vectors
+    partitioned by (batch, centroid_id) with a _centroids sidecar) — built
+    ONCE per (sf_dir, n_centroids) per process into a session-scoped temp
+    dir, then
     read back by every caller, so repeated query batches (driver gate + bench
     warm/trials) pay corpus assignment once and serve from
     dynamic-partition-pruned scans thereafter. This is the 100 TB pattern:

@@ -16,19 +16,19 @@ pruning keeps per-query cost ~nprobe/n_centroids of the corpus regardless of
 how many batches have accumulated.
 
 Replay safety: a replayed micro-batch id overwrites exactly its own
-``batch=<id>`` partition (dynamic partition overwrite), so at-least-once
-delivery can't double-insert vectors. Quantizer drift: centroids and the SQ
-grid are frozen at publish (out-of-grid vectors saturate soundly); on
-distribution drift, rebuild with ``ivfsq_publish`` between availableNow
-drains — the same rebuild posture as the IVF/IVF-PQ indexes.
+``batch=<id>`` partition (:func:`parqueryd_spark.streaming.state.land`), so
+at-least-once delivery can't double-insert vectors. Quantizer drift:
+centroids and the SQ grid are frozen at publish (out-of-grid vectors
+saturate soundly); on distribution drift, rebuild with ``ivfsq_publish``
+between availableNow drains — the same rebuild posture as the IVF/IVF-PQ
+indexes.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
+from parqueryd_spark.sources.fs import HadoopFS
 from parqueryd_spark.streaming import state
 
 
@@ -55,7 +55,10 @@ def stream_embed_into_ivfsq(
         emb = hash_embed(batch_df, id_col, text_col, dim=dim).withColumnRenamed(
             id_col, "vec_id"
         )
-        if not os.path.isdir(os.path.join(index_dir, "grid")):
+        # probe through Hadoop FileSystem (as state.standing does): an
+        # os.path probe is always False on file://, hdfs:// and s3a:// paths
+        # and would republish over the index on every micro-batch
+        if not HadoopFS(spark, index_dir).is_dir(f"{index_dir}/_grid"):
             ivfsq_publish(
                 spark,
                 index_dir,

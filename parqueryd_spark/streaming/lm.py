@@ -14,9 +14,12 @@ Two directions, mirroring the sketch family's batch/stream symmetry:
   frozen-model pattern as streaming/embed.py (frozen grid/centroids): the
   model only moves when a maintenance trigger republishes it.
 
-Model parameters travel WITH the state: ``stream_maintain_lm`` records
-(k, n) as the store's ``_meta``, and ``read_lm`` reads it back — maintaining
-with n=3 then loading can never silently split grams at the wrong position.
+Model parameters travel WITH the state: ``stream_maintain_lm`` and
+``operators/lm.lm_publish`` claim (k, n) as the store's ``_meta`` through
+:func:`claim_lm_meta`, and ``read_lm`` (≡ ``operators/lm.lm_load``) reads it
+back — maintaining or publishing with n=3 then loading can never silently
+split grams at the wrong position. A published LM and a stream-maintained
+one are the same store, so :func:`compact_lm_state` serves both.
 """
 
 from __future__ import annotations
@@ -62,6 +65,23 @@ def _validate_order(spark, lm_dir: str, n: int) -> None:
     _check_order(parts, n)
 
 
+def claim_lm_meta(spark, lm_dir: str, k: float, n: int) -> None:
+    """Bind the store at ``lm_dir`` to (k, n) for its lifetime
+    (:func:`state.claim_meta`). A store with different recorded parameters
+    raises — older batch partitions would stay at the old order while the
+    meta claims the new one; adopting a pre-meta store first checks its
+    existing grams ARE at order ``n``."""
+    state.claim_meta(
+        spark,
+        lm_dir,
+        (float(k), int(n)),
+        _META_SCHEMA,
+        "cannot change model parameters (older batch partitions would "
+        "keep the old order); use a fresh lm_dir to retrain",
+        adopt=lambda: _validate_order(spark, lm_dir, int(n)),
+    )
+
+
 def stream_maintain_lm(
     doc_stream: DataFrame,
     lm_dir: str,
@@ -94,18 +114,8 @@ def stream_maintain_lm(
         nonlocal meta_checked
         if not meta_checked:
             # (k, n) are constant for the STORE's lifetime, not just this
-            # stream's; adopting a pre-meta store first checks its existing
-            # grams ARE at this stream's order
-            spark = batch_df.sparkSession
-            state.claim_meta(
-                spark,
-                lm_dir,
-                (float(k), int(n)),
-                _META_SCHEMA,
-                "cannot change model parameters (older batch partitions would "
-                "keep the old order); use a fresh lm_dir to retrain",
-                adopt=lambda: _validate_order(spark, lm_dir, int(n)),
-            )
+            # stream's
+            claim_lm_meta(batch_df.sparkSession, lm_dir, k, n)
             meta_checked = True
         return ngram_counts(batch_df, text_col, n)
 
@@ -123,15 +133,15 @@ def read_lm(
     partials (sum per gram — linear, so this equals one-shot ``lm_train``
     over the full corpus bit-exactly).
 
-    (k, n) default to the persisted ``_meta`` written by
-    :func:`stream_maintain_lm` (only a genuinely missing ``_meta`` — the
+    (k, n) default to the persisted ``_meta`` claimed by
+    :func:`claim_lm_meta` (only a genuinely missing ``_meta`` — the
     documented pre-meta layout — falls back to the 0.5/2 defaults; corrupt
     meta or IO errors propagate); explicit arguments override.
 
     Order validation is WRITE-TIME-ENFORCED for meta-bearing stores (r15,
     guide §2.4 — the serve path sheds a full count-table scan per call): a
     present ``_meta`` certifies every batch was written at (or validated
-    against) the recorded order by :func:`stream_maintain_lm`, so when the
+    against) the recorded order by :func:`claim_lm_meta`, so when the
     effective n equals the stored one the serve trusts it and runs ZERO
     jobs beyond the 1-row meta read before scoring. The full gram-width
     scan (min == max == n over EVERY stored gram, never a sampled row)

@@ -77,10 +77,10 @@ def test_append_replay_is_idempotent(spark, emb, centroids, tmp_path):
     ivf_publish(spark, idx, emb.filter(F.col("vec_id") % 2 == 0), centroids)
     rest = emb.filter(F.col("vec_id") % 2 == 1)
     ivf_append(spark, idx, rest, batch="b1")
-    n1 = spark.read.parquet(f"{idx}/vectors").count()
+    n1 = ivf_load(spark, idx)[0].count()
     # a failed-and-replayed ingest re-runs the same batch id
     ivf_append(spark, idx, rest, batch="b1")
-    assert spark.read.parquet(f"{idx}/vectors").count() == n1
+    assert ivf_load(spark, idx)[0].count() == n1
 
 
 def test_bucket_stats_per_batch(spark, emb, centroids, tmp_path):

@@ -521,3 +521,85 @@ def test_ivfpq_append_preserves_spread_replay_encoding(spark, emb, tmp_path):
         r["vec_id"]: list(r["codes"]) for r in pq_encode_cols(inc, cb).collect()
     }
     assert appended == expect and len(appended) > 0
+
+
+def _synthetic_vectors(spark, path: str, lo: int, hi: int, seed: int):
+    """Synthetic vectors, written as parquet so every scan stays in the JVM."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    ids = range(lo, hi)
+    pd.DataFrame({"vec_id": ids, "embedding": [list(rng.normal(size=8)) for _ in ids]}).to_parquet(
+        path
+    )
+    return spark.read.parquet(path)
+
+
+def test_failed_republish_keeps_serving_then_success_replaces(spark, tmp_path, monkeypatch):
+    """Crash-safe republish: the codes and their _centroids/_codebooks/_meta
+    sidecars are one atomic_publish generation, so a republish that fails
+    mid-swap leaves the previous index — appended batches included —
+    serving, and a successful one replaces it whole."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from parqueryd_spark.operators.quantization import (
+        ivfpq_append,
+        ivfpq_load,
+        ivfpq_meta,
+        ivfpq_publish,
+        ivfpq_search,
+    )
+    from parqueryd_spark.sources import sinks
+
+    base = _synthetic_vectors(spark, str(tmp_path / "base.parquet"), 0, 48, seed=1)
+    inc = _synthetic_vectors(spark, str(tmp_path / "inc.parquet"), 100, 116, seed=2)
+    queries = base.unionByName(inc).where("vec_id % 8 = 0")
+    idx = str(tmp_path / "ivfpq")
+
+    def publish(centroid_ids):
+        cents = base.where(F.col("vec_id").isin(centroid_ids)).select(
+            F.col("vec_id").cast("int").alias("centroid_id"), "embedding"
+        )
+        ivfpq_publish(spark, idx, base, cents, dim=8, m=4, k_codes=4, codebook="spread")
+
+    def served():
+        codes, cents, cb = ivfpq_load(spark, idx)
+        hits = ivfpq_search(codes, cents, cb, queries, nprobe=2, k=3, lut_mode="det")
+        return (
+            sorted(r.centroid_id for r in cents.collect()),
+            cb,
+            sorted(map(tuple, hits.collect())),
+            sorted(r.batch for r in codes.select("batch").distinct().collect()),
+        )
+
+    publish([0, 1, 2, 3])
+    ivfpq_append(spark, idx, inc, batch="b1")
+    before = served()
+    assert before[0] == [0, 1, 2, 3] and before[3] == ["b1", "base"]
+    assert {r[1] for r in before[2]} & set(range(100, 116))  # b1 rows answer
+
+    # fail the swap's second rename (incoming -> target): the publish must
+    # roll back to the previous generation
+    real_rename = sinks.HadoopFS.rename_or_raise
+    calls = {"n": 0}
+
+    def flaky_rename(self, src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("injected rename failure")
+        return real_rename(self, src, dst)
+
+    monkeypatch.setattr(sinks.HadoopFS, "rename_or_raise", flaky_rename)
+    with pytest.raises(OSError):
+        publish([10, 11, 12])
+    monkeypatch.undo()
+    assert served() == before
+    assert not [d for d in os.listdir(tmp_path) if d.startswith(".")]  # nothing orphaned
+
+    publish([10, 11, 12])
+    assert sorted(r.centroid_id for r in ivfpq_load(spark, idx)[1].collect()) == [10, 11, 12]
+    assert sorted(d for d in os.listdir(idx) if d.startswith("batch=")) == ["batch=base"]
+    assert ivfpq_meta(spark, idx) == {"residual": False, "codebook": "spread"}

@@ -262,3 +262,43 @@ def test_read_lm_mixed_order_store_detected(tmp_path, spark):
     )
     with pytest.raises(ValueError, match="mixed"):
         read_lm(spark, lm_dir, k=0.5, n=2)
+
+
+def test_lm_publish_refuses_a_different_order(tmp_path, spark):
+    """Republishing over an LM store at a different order raises with the
+    stream_maintain_lm refusal instead of overwriting the meta and leaving
+    older batches at the old order; the store keeps serving at n=2, and a
+    published LM compacts like a stream-maintained one."""
+    from parqueryd_spark.operators.lm import lm_append, lm_load, lm_publish
+    from parqueryd_spark.streaming.lm import compact_lm_state
+
+    lm_dir = str(tmp_path / "lm")
+    base = spark.createDataFrame([("a b c d",)], "text string")
+    lm_publish(spark, lm_dir, base, n=2)
+    lm_append(spark, lm_dir, spark.createDataFrame([("x y z",)], "text string"), batch="b1")
+    with pytest.raises(ValueError, match="cannot change model parameters"):
+        lm_publish(spark, lm_dir, base, n=3)
+    want = {"a b": 1, "b c": 1, "c d": 1, "x y": 1, "y z": 1}
+    lm = lm_load(spark, lm_dir)
+    assert lm.n == 2 and {r["gram"]: r["c"] for r in lm.bigrams.collect()} == want
+    assert compact_lm_state(spark, lm_dir) == len(want)
+    lm = lm_load(spark, lm_dir)
+    assert lm.n == 2 and {r["gram"]: r["c"] for r in lm.bigrams.collect()} == want
+
+
+def test_ivfpq_meta_corrupt_meta_raises(tmp_path, spark):
+    """Only a MISSING _meta falls back to the raw-vector/kmeans defaults; a
+    corrupt one raises, because serving a residual or spread index under
+    the defaults would pick the wrong LUT and encoder."""
+    import os
+
+    from parqueryd_spark.operators.quantization import ivfpq_meta
+
+    idx = str(tmp_path / "ivfpq")
+    os.makedirs(idx)
+    assert ivfpq_meta(spark, idx) == {"residual": False, "codebook": "kmeans"}
+    os.makedirs(os.path.join(idx, "_meta"))
+    with open(os.path.join(idx, "_meta", "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer|corrupt|magic"):
+        ivfpq_meta(spark, idx)

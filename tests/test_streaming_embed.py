@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 
 from parqueryd_spark.streaming.embed import stream_embed_into_ivfsq
 
@@ -18,9 +19,10 @@ def _write_docs(stream_in: str, name: str, rows):
     )
 
 
-def test_stream_embed_builds_then_appends_and_serves(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_stream_embed_builds_then_appends_and_serves(spark, tmp_path, scheme):
     stream_in = str(tmp_path / "in")
-    idx = str(tmp_path / "idx")
+    idx = scheme + str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(stream_in)
 
