@@ -19,7 +19,12 @@ Domain modules register themselves via the ``@query`` decorator on import:
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -62,6 +67,58 @@ def increment_of(key_col: str, i: int, n: int = 3):
     from pyspark.sql import functions as F
 
     return F.coalesce(F.pmod(F.col(key_col), F.lit(n)), F.lit(0)) == i
+
+
+def land_increments(
+    df: DataFrame, key_col: str, partial: Callable[[DataFrame], DataFrame], path: str
+) -> None:
+    """Land ``partial`` of each of the three :func:`increment_of` splits of
+    ``df`` as ``batch=0..2`` of the store at ``path`` — the per-batch layout
+    the ``streaming/`` maintainers write, so served rows read it through the
+    streaming readers."""
+    from parqueryd_spark.streaming.state import land
+
+    for i in range(3):
+        land(partial(df.where(increment_of(key_col, i))), path, i)
+
+
+_SERVED: dict[tuple, str] = {}
+_SERVED_LOCK = threading.RLock()
+_SERVED_SEQ = itertools.count()
+_served_root: str | None = None
+
+
+def served(kind: str, sf_dir: str, build: Callable[[str], None], *params) -> str:
+    """Directory of the served state ``kind`` for ``sf_dir`` and ``params``.
+
+    Served rows answer from state put in place before the query: the first
+    call per process and key ``(kind, abspath(sf_dir), *params)`` runs
+    ``build(path)`` on a fresh directory, and every later call gets the same
+    path without rebuilding. A path whose directory has since disappeared is
+    rebuilt. A ``build`` that raises has its directory removed and nothing
+    recorded, so the next call builds again. All state lives under one
+    process-scoped temp root that is removed at interpreter exit; no process
+    reads another's state. One lock covers lookup and build, so concurrent
+    callers of any kind build in turn (re-entrant: a build may serve other
+    state)."""
+    global _served_root
+    key = (kind, os.path.abspath(sf_dir), *params)
+    with _SERVED_LOCK:
+        path = _SERVED.get(key)
+        if path is not None and os.path.isdir(path):
+            return path
+        if _served_root is None:
+            _served_root = tempfile.mkdtemp(prefix="parqueryd_spark_")
+            atexit.register(shutil.rmtree, _served_root, ignore_errors=True)
+        path = os.path.join(_served_root, f"parqueryd_spark_{kind}_{next(_SERVED_SEQ)}")
+        os.mkdir(path)
+        try:
+            build(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        _SERVED[key] = path
+        return path
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
